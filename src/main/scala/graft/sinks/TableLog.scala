@@ -35,14 +35,16 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * On an object store the equivalent primitive is a conditional PUT
   * (if-none-match); on HDFS, create-exclusive + rename.
   *
-  * Concurrency = optimistic CAS: a writer computes its manifest against
-  * the latest version N and tries to commit N+1; if another writer got
-  * there first, it re-reads the new snapshot, RECOMPUTES (append just
-  * re-unions the file list — its already-written data files are reused;
-  * rewrite re-runs its transform against the new base), and retries.
-  * Readers never block and never see partial state: uncommitted data
-  * files are invisible because reads scan exactly the files the chosen
-  * manifest lists.
+  * Concurrency = optimistic CAS through ONE commit path, the private
+  * `commit` combinator every write face calls: it reads the latest
+  * version N, lets the face state its change against N, decides
+  * checkpoint vs delta, and tries to commit N+1; if another writer got
+  * there first, it re-reads the new snapshot and the face RECOMPUTES
+  * (append just re-unions the file list — its already-written data
+  * files are reused; rewrite re-runs its transform against the new
+  * base) before the next try. Readers never block and never see partial
+  * state: uncommitted data files are invisible because reads scan
+  * exactly the files the chosen manifest lists.
   *
   * Crash anywhere leaves only invisible garbage (orphan data dirs, temp
   * manifests) that `vacuum` reclaims; there is no recover() step and no
@@ -488,75 +490,142 @@ object TableLog {
   private def primitiveFor(table: String): CommitPrimitive =
     Option(tablePrimitives.get(table)).getOrElse(CommitPrimitive.HardLink)
 
-  /** The atomic pointer swing: publish the fully-rendered manifest at
-    * its versioned name via the commit primitive. True = committed;
-    * false = CAS conflict (that version now exists — re-read and
-    * retry). A vanished temp manifest (a concurrent `vacuum` with an
-    * aggressive staleness threshold) is ALSO surfaced as a retry, not
-    * a crash — the loop rewrites a fresh temp and tries again. */
-  private def tryCommit(table: String, r: ManifestRec): Boolean = {
-    Files.createDirectories(logDir(table))
-    // commit timestamp, stamped at the single commit gate so every
-    // write path carries one, and STRICTLY MONOTONIC vs the previous
-    // version (max(now, prev+1) — one extra small-file read): a clock
-    // hiccup or two commits in one millisecond would otherwise make
-    // ts → version resolution ambiguous, and `readAsOf`'s binary
-    // search relies on ts ordering matching version ordering (Delta
-    // applies the same in-commit adjustment for its timestamp travel)
-    val prev =
-      if (r.version <= 1) None
-      else parseRec(manifestPath(table, r.version - 1))
-    val prevTs = prev.map(_.tsMs).getOrElse(0L)
-    // txn high-water index: fold this commit's structured txn id into
-    // the previous version's map (max-sequence wins, so an
-    // out-of-order replay never regresses the frontier); completeness
-    // propagates from v1 so a legacy chain is never misread as indexed
-    val hwBase = prev.map(_.txnHw).getOrElse(Map.empty[String, (Long, Long)])
-    val hw = r.txn.flatMap(parseTxnSeq) match {
-      case Some((stream, n))
-          if !hwBase.get(stream).exists(_._1 >= n) =>
-        hwBase + (stream -> (n, r.version))
-      case _ => hwBase
-    }
-    // a CLONE's first manifest starts a fresh txn history by
-    // construction (no prior writers in dst), so the index is complete
-    val complete = r.version == 1 || r.action == "clone" ||
-      prev.exists(_.txnComplete)
-    // schema-op history is carried COMPLETE in every manifest (same
-    // denormalization as the txn index): this commit's additions, if
-    // any, append to the previous version's full list
-    // a RESTORE resets the op history to the target version's list —
-    // the restored files pre-date ops that no longer apply, and
-    // carrying them forward would freed-fence restored columns to null
-    val ops =
-      if (r.action == "restore") r.schemaOps
-      else prev.map(_.schemaOps).getOrElse(Nil) ++ r.schemaOps
-    // CHECK constraint set: previous complete set ± this commit's delta;
-    // a CLONE carries the source's set verbatim (there is no prev)
-    val cks =
-      if (r.action == "clone") r.checks
-      else prev.map(_.checks).getOrElse(Nil)
+  /** One commit's content, stated against the base snapshot it was
+    * built on; [[commit]] renders it as a checkpoint or a delta.
+    * `adds` are this commit's new data files (stamped at the commit
+    * version) and `removes` the paths it retires. `files` restates the
+    * whole list instead (rewrite, restore, overwrite, branch merge);
+    * `dels` restates the complete delete set (materialize, fold,
+    * restore), and `pruneDels` drops every delete entry that fences no
+    * surviving file. Either restatement forces a checkpoint — a delta
+    * can neither replace the list wholesale nor remove a delete entry.
+    * `delAdds`, `schemaOps`, `ckAdd` and `ckDrop` are this commit's
+    * additions, folded by the commit gate. */
+  private final case class Change(action: String, rows: Long,
+      schemaJson: Option[String], counters: Map[String, Long],
+      adds: Seq[FileEntry] = Nil, removes: Seq[String] = Nil,
+      delAdds: Seq[DeleteEntry] = Nil,
+      files: Option[Seq[FileEntry]] = None,
+      dels: Option[Seq[DeleteEntry]] = None, pruneDels: Boolean = false,
+      schemaOps: Seq[SchemaOp] = Nil,
+      ckAdd: Option[(String, String)] = None,
+      ckDrop: Option[String] = None)
+
+  /** What [[commit]] returns: the version now holding the write, and
+    * whether THIS call committed it (false: `build` was a no-op, or a
+    * racing writer already committed the same txn id). */
+  private final case class Landed(version: Long, fresh: Boolean)
+
+  /** THE commit path: every write face commits through here
+    * (`cloneTable` and `publishBranch` publish manifests they render
+    * whole). Each attempt re-reads the latest
+    * snapshot, answers a replayed `txnId` with the version that
+    * committed it, and hands `build` the base and the version it would
+    * commit (base + 1). `build` runs the face's guards and Spark work
+    * against that base and states the [[Change]], or None for a no-op.
+    * The checkpoint decision is made here and nowhere else: FULL at v1,
+    * every `checkpointInterval`-th version, whole-list replacements,
+    * and commits whose live delete set shrank or changed; DELTA
+    * otherwise. A CAS conflict re-runs the attempt against the new
+    * base — written data files are the face's to reuse or leave as
+    * invisible garbage for vacuum. */
+  private def commit(table: String, txnId: Option[String] = None)(
+      build: (Option[Snapshot], Long) => Option[Change]): Landed = {
+    // The commit gate: stamp the version-chained fields, then publish
+    // the fully-rendered manifest at its versioned name via the commit
+    // primitive. True = committed; false = CAS conflict (that version
+    // now exists — re-read and retry). A vanished temp manifest (a
+    // concurrent `vacuum` with an aggressive staleness threshold) is
+    // ALSO surfaced as a retry, not a crash — the next attempt rewrites
+    // a fresh temp.
+    def tryCommit(r: ManifestRec): Boolean = {
+      Files.createDirectories(logDir(table))
+      // commit timestamp, stamped at the single commit gate so every
+      // write path carries one, and STRICTLY MONOTONIC vs the previous
+      // version (max(now, prev+1) — one extra small-file read): a clock
+      // hiccup or two commits in one millisecond would otherwise make
+      // ts → version resolution ambiguous, and `readAsOf`'s binary
+      // search relies on ts ordering matching version ordering (Delta
+      // applies the same in-commit adjustment for its timestamp travel)
+      val prev =
+        if (r.version <= 1) None
+        else parseRec(manifestPath(table, r.version - 1))
+      val prevTs = prev.map(_.tsMs).getOrElse(0L)
+      // txn high-water index: fold this commit's structured txn id into
+      // the previous version's map (max-sequence wins, so an
+      // out-of-order replay never regresses the frontier); completeness
+      // propagates from v1 so a legacy chain is never misread as indexed
+      val hwBase =
+        prev.map(_.txnHw).getOrElse(Map.empty[String, (Long, Long)])
+      val hw = r.txn.flatMap(parseTxnSeq) match {
+        case Some((stream, n))
+            if !hwBase.get(stream).exists(_._1 >= n) =>
+          hwBase + (stream -> (n, r.version))
+        case _ => hwBase
+      }
+      val complete = r.version == 1 || prev.exists(_.txnComplete)
+      // schema-op history is carried COMPLETE in every manifest (same
+      // denormalization as the txn index): this commit's additions, if
+      // any, append to the previous version's full list
+      // a RESTORE resets the op history to the target version's list —
+      // the restored files pre-date ops that no longer apply, and
+      // carrying them forward would freed-fence restored columns to null
+      val ops =
+        if (r.action == "restore") r.schemaOps
+        else prev.map(_.schemaOps).getOrElse(Nil) ++ r.schemaOps
+      // CHECK constraint set: previous complete set ± this commit's delta
+      val cks = prev.map(_.checks).getOrElse(Nil)
         .filterNot(c => r.ckDrop.contains(c._1)) ++ r.ckAdd.toSeq
-    val stamped = r.copy(
-      schemaOps = ops,
-      checks = cks,
-      tsMs = math.max(System.currentTimeMillis, prevTs + 1),
-      txnHw = hw, txnComplete = complete,
-      // defensive backstop for the MOR-delete fence: a delta's adds
-      // are NEW files by definition, so an unstamped (ver=0) add is
-      // stamped here — otherwise an older delete sidecar would wrongly
-      // apply to rows appended after it
-      adds =
-        if (r.kind == "delta") r.adds.map(f =>
-          if (f.ver == 0) f.copy(ver = r.version) else f)
-        else r.adds)
-    primitiveFor(table).putIfAbsent(manifestPath(table, stamped.version),
-      renderManifest(stamped).getBytes(UTF_8))
+      val stamped = r.copy(
+        schemaOps = ops,
+        checks = cks,
+        tsMs = math.max(System.currentTimeMillis, prevTs + 1),
+        txnHw = hw, txnComplete = complete)
+      primitiveFor(table).putIfAbsent(manifestPath(table, stamped.version),
+        renderManifest(stamped).getBytes(UTF_8))
+    }
+    @scala.annotation.tailrec
+    def attempt(): Landed = {
+      val base = snapshot(table)
+      val version = base.fold(0L)(_.version) + 1
+      txnId.flatMap(committedTxnVersion(table, _)) match {
+        case Some(v) => Landed(v, fresh = false)
+        case None => build(base, version) match {
+          case None => Landed(version - 1, fresh = false)
+          case Some(c) =>
+            val adds = c.adds.map(_.copy(ver = version))
+            lazy val files = c.files.getOrElse {
+              val rm = c.removes.toSet
+              base.fold(Seq.empty[FileEntry])(
+                _.files.filterNot(f => rm(f.path))) ++ adds
+            }
+            val baseDels = base.fold(Seq.empty[DeleteEntry])(_.dels)
+            val dels = c.dels.getOrElse(
+              if (c.pruneDels) liveDelsAfter(base.get, files) else baseDels)
+            val full = base.isEmpty || version % checkpointInterval == 0 ||
+              c.files.isDefined || dels != baseDels
+            val delta = ManifestRec(version, version - 1, c.action, c.rows,
+              "delta", Nil, adds, c.removes, Nil, c.delAdds, txnId,
+              c.schemaJson, c.counters, schemaOps = c.schemaOps,
+              ckAdd = c.ckAdd, ckDrop = c.ckDrop)
+            val r =
+              if (full) delta.copy(kind = "full", files = files, adds = Nil,
+                removes = Nil, dels = dels ++ c.delAdds, delAdds = Nil)
+              else delta
+            if (tryCommit(r)) Landed(version, fresh = true)
+            else attempt()
+        }
+      }
+    }
+    attempt()
   }
 
-  /** Write `df` as a new immutable data-file set under `<table>/data/`,
-    * returning (relative file paths, footer row count). Never visible
-    * until a manifest referencing it commits. */
+  /** [[commit]] for the faces that need a committed base. */
+  private def commitOn(table: String, txnId: Option[String] = None)(
+      build: (Snapshot, Long) => Option[Change]): Landed =
+    commit(table, txnId)((b, version) => build(b.getOrElse(
+      sys.error(s"no committed version in $table")), version))
+
   // ---- manifest bloom stats: point-lookup pruning where range stats
   // are blind. A [min,max] range on an UNCLUSTERED high-cardinality key
   // spans nearly the whole domain in every file, so readWhere prunes
@@ -629,6 +698,9 @@ object TableLog {
         s"$bad row(s) — not committing") }
   }
 
+  /** Write `df` as a new immutable data-file set under `<table>/data/`,
+    * returning (its file entries, footer row count). Never visible
+    * until a manifest referencing it commits. */
   private def writeDataFiles(spark: SparkSession, table: String,
       df: DataFrame, statsCols: Seq[String],
       strStatsCols: Seq[String] = Nil,
@@ -1997,45 +2069,13 @@ object TableLog {
     val (newFiles, newRows) =
       writeDataFiles(spark, table, df, statsCols, strStatsCols,
         bloomStatsCols)
-    var committed = -1L
-    while (committed < 0) {
-      val base = snapshot(table)
-      // a racing writer may have committed the same txn while we wrote
-      txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
-      // evolve the recorded schema; a legacy table (no recorded schema)
-      // stays legacy — recording only the append's schema would claim
-      // columns the old files were never checked against
-      val evolved = base.flatMap(_.schemaJson) match {
-        case Some(j) => Some(mergeEvolved(
-          org.apache.spark.sql.types.DataType.fromJson(j)
-            .asInstanceOf[org.apache.spark.sql.types.StructType],
-          df.schema).json)
-        case None if base.isEmpty => Some(df.schema.json)
-        case None => None
-      }
-      // on FEED tables, refuse re-adding a name a schema op freed
-      // (rename-from or drop): already-published links physically
-      // carry the old incarnation under that name, and the feed's
-      // by-name declared-schema read has no per-file version fence —
-      // the dead values would resurrect for any consumer reading
-      // after the re-add. Table reads fence per cohort; feed links
-      // cannot. (Fresh names are fine — old links read them as null.)
-      if (feedEnabled(table)) base.foreach { b =>
-        val baseNames = b.schemaJson.map(j =>
-          org.apache.spark.sql.types.DataType.fromJson(j)
-            .asInstanceOf[org.apache.spark.sql.types.StructType]
-            .fieldNames.toSet).getOrElse(Set.empty[String])
-        val freed = b.schemaOps.map(_.col).toSet
-        val readd = df.schema.fieldNames.filterNot(baseNames)
-          .filter(freed)
-        require(readd.isEmpty,
-          s"append to feed-enabled $table: column(s) ${readd.mkString(", ")} " +
-            "re-add a name a schema op freed — published feed links " +
-            "still carry the old incarnation under that name and would " +
-            "resurrect its values by name; use a fresh column name")
-      }
-      val version = base.map(_.version).getOrElse(0L) + 1
-      val rows = base.map(_.rows).getOrElse(0L) + newRows
+    // the commit re-reads the base per attempt; a racing writer may
+    // have committed the same txn while we wrote
+    val landed = commit(table, txnId) { (base, _) =>
+      val evolved = appendSchema(table, base, df.schema, "append",
+        "published feed links still carry the old incarnation under " +
+          "that name and would resurrect its values by name; use a " +
+          "fresh column name")
       // cumulative counters: merged INSIDE the CAS loop so a racing
       // append's contribution is never lost (the loser re-reads base)
       val bc = base.map(_.counters).getOrElse(Map.empty[String, Long])
@@ -2048,27 +2088,51 @@ object TableLog {
             "rewrite's counterSet)"))
         k -> p
       }
-      val action = if (base.isEmpty) "create" else "append"
       // an append commits O(appended files): a delta manifest, except
-      // every checkpointInterval-th version (and v1), which writes the
-      // full list so resolution never replays more than one interval
-      val stamped = newFiles.map(_.copy(ver = version))
-      val r =
-        if (base.isEmpty || version % checkpointInterval == 0)
-          ManifestRec(version, version - 1, action, rows, "full",
-            base.map(_.files).getOrElse(Nil) ++ stamped, Nil, Nil,
-            base.map(_.dels).getOrElse(Nil), Nil,
-            txnId, evolved, counters)
-        else
-          ManifestRec(version, version - 1, action, rows, "delta",
-            Nil, stamped, Nil, Nil, Nil, txnId, evolved, counters)
-      if (tryCommit(table, r)) committed = version
+      // on the checkpoint cadence
+      Some(Change(if (base.isEmpty) "create" else "append",
+        base.map(_.rows).getOrElse(0L) + newRows, evolved, counters,
+        adds = newFiles))
     }
     // change-feed publication: heals any crashed prior publish too. A
     // crash between the commit above and this publish is the same
     // window — healed by the NEXT append (or an explicit publishFeed).
-    if (feedEnabled(table)) publishFeed(spark, table)
-    committed
+    if (landed.fresh && feedEnabled(table)) publishFeed(spark, table)
+    landed.version
+  }
+
+  /** The schema an append-shaped commit records over `base`: the
+    * recorded schema evolved by `incoming` (`mergeEvolved`); a legacy
+    * table (no recorded schema) stays legacy — recording only the
+    * append's schema would claim columns the old files were never
+    * checked against. On FEED tables, refuses re-adding a name a schema
+    * op freed (rename-from or drop): already-published links physically
+    * carry the old incarnation under that name, and the feed's by-name
+    * declared-schema read has no per-file version fence — the dead
+    * values would resurrect for any consumer reading after the re-add.
+    * Table reads fence per cohort; feed links cannot. (Fresh names are
+    * fine — old links read them as null.) `what`/`why` frame the
+    * refusal. */
+  private def appendSchema(table: String, base: Option[Snapshot],
+      incoming: org.apache.spark.sql.types.StructType, what: String,
+      why: String): Option[String] = {
+    def structOf(j: String) = org.apache.spark.sql.types.DataType
+      .fromJson(j).asInstanceOf[org.apache.spark.sql.types.StructType]
+    val evolved = base.flatMap(_.schemaJson) match {
+      case Some(j) => Some(mergeEvolved(structOf(j), incoming).json)
+      case None if base.isEmpty => Some(incoming.json)
+      case None => None
+    }
+    if (feedEnabled(table)) base.foreach { b =>
+      val baseNames = b.schemaJson.map(structOf(_).fieldNames.toSet)
+        .getOrElse(Set.empty[String])
+      val freed = b.schemaOps.map(_.col).toSet
+      val readd = incoming.fieldNames.filterNot(baseNames).filter(freed)
+      require(readd.isEmpty,
+        s"$what to feed-enabled $table: column(s) ${readd.mkString(", ")} " +
+          s"re-add a name a schema op freed — $why")
+    }
+    evolved
   }
 
   /** The version that committed `txnId`, if any. O(1) on the hot path:
@@ -2143,25 +2207,10 @@ object TableLog {
   private[graft] def commitMetadataOnly(table: String,
       txnId: Option[String] = None): Long = {
     txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
-    var committed = -1L
-    while (committed < 0) {
-      val latest = latestVersion(table)
-      require(latest > 0, s"commitMetadataOnly: no committed version in $table")
-      val prev = parseRec(manifestPath(table, latest)).getOrElse(
-        sys.error(s"$table: v$latest unreadable"))
-      val version = latest + 1
-      val r =
-        if (version % checkpointInterval == 0) {
-          val s = snapshotOrFail(table)
-          ManifestRec(version, latest, "noop", prev.rows, "full",
-            s.files, Nil, Nil, s.dels, Nil, txnId, prev.schemaJson,
-            prev.counters)
-        } else
-          ManifestRec(version, latest, "noop", prev.rows, "delta", Nil,
-            Nil, Nil, Nil, Nil, txnId, prev.schemaJson, prev.counters)
-      if (tryCommit(table, r)) committed = version
-    }
-    committed
+    commit(table, txnId) { (b, _) =>
+      require(b.nonEmpty, s"commitMetadataOnly: no committed version in $table")
+      b.map(base => Change("noop", base.rows, base.schemaJson, base.counters))
+    }.version
   }
 
   /** Rename a column — PURE METADATA, zero data-file rewrites (at
@@ -2249,9 +2298,7 @@ object TableLog {
       check: String): Long = {
     require(name.nonEmpty && !name.contains(";") && !name.contains("\n"),
       s"addCheckConstraint($table): invalid constraint name '$name'")
-    var committed = -1L
-    while (committed < 0) {
-      val base = snapshotOrFail(table)
+    commitOn(table) { (base, _) =>
       require(!base.checks.exists(_._1 == name),
         s"addCheckConstraint($table): constraint '$name' already exists")
       // an EMPTY table (e.g. a just-created catalog table adding its
@@ -2268,30 +2315,19 @@ object TableLog {
             .asInstanceOf[org.apache.spark.sql.types.StructType])
       enforceChecks(spark, table, Seq(name -> check),
         existing, "addCheckConstraint: existing data")
-      val version = base.version + 1
-      val r = ManifestRec(version, base.version, "check_add", base.rows,
-        "delta", Nil, Nil, Nil, Nil, Nil, None, base.schemaJson,
-        base.counters, ckAdd = Some(name -> check))
-      if (tryCommit(table, r)) committed = version
-    }
-    committed
+      Some(Change("check_add", base.rows, base.schemaJson, base.counters,
+        ckAdd = Some(name -> check)))
+    }.version
   }
 
   /** Drop a CHECK constraint by name — metadata-only commit. */
-  def dropCheckConstraint(table: String, name: String): Long = {
-    var committed = -1L
-    while (committed < 0) {
-      val base = snapshotOrFail(table)
+  def dropCheckConstraint(table: String, name: String): Long =
+    commitOn(table) { (base, _) =>
       require(base.checks.exists(_._1 == name),
         s"dropCheckConstraint($table): no constraint '$name'")
-      val version = base.version + 1
-      val r = ManifestRec(version, base.version, "check_drop", base.rows,
-        "delta", Nil, Nil, Nil, Nil, Nil, None, base.schemaJson,
-        base.counters, ckDrop = Some(name))
-      if (tryCommit(table, r)) committed = version
-    }
-    committed
-  }
+      Some(Change("check_drop", base.rows, base.schemaJson, base.counters,
+        ckDrop = Some(name)))
+    }.version
 
   /** ADD a nullable column — PURE METADATA, the explicit half of the
     * additive evolution lattice (`mergeEvolved` commits the same
@@ -2310,9 +2346,7 @@ object TableLog {
     require(nullable, s"addColumn($table, $name): a non-nullable add " +
       "is unsatisfiable on existing rows — add nullable, backfill, " +
       "then enforce with a CHECK constraint")
-    var committed = -1L
-    while (committed < 0) {
-      val base = snapshotOrFail(table)
+    commitOn(table) { (base, _) =>
       require(base.schemaJson.nonEmpty,
         s"addColumn on $table: legacy table without a recorded " +
           "schema — rewrite it once to record one")
@@ -2324,13 +2358,8 @@ object TableLog {
       val evolved = org.apache.spark.sql.types.StructType(
         logical.fields :+ org.apache.spark.sql.types.StructField(
           name, dataType, nullable = true))
-      val version = base.version + 1
-      val r = ManifestRec(version, base.version, "schema", base.rows,
-        "delta", Nil, Nil, Nil, Nil, Nil, None, Some(evolved.json),
-        base.counters)
-      if (tryCommit(table, r)) committed = version
-    }
-    committed
+      Some(Change("schema", base.rows, Some(evolved.json), base.counters))
+    }.version
   }
 
   /** WIDEN a column's type — PURE METADATA, the explicit half of the
@@ -2346,10 +2375,8 @@ object TableLog {
     * column (its stored key values carry the old type). Routed from
     * `ALTER TABLE … ALTER COLUMN … TYPE` by the catalog. */
   def widenColumnType(spark: SparkSession, table: String, name: String,
-      to: org.apache.spark.sql.types.DataType): Long = {
-    var committed = -1L
-    while (committed < 0) {
-      val base = snapshotOrFail(table)
+      to: org.apache.spark.sql.types.DataType): Long =
+    commitOn(table) { (base, _) =>
       require(base.schemaJson.nonEmpty,
         s"widenColumnType on $table: legacy table without a recorded " +
           "schema — rewrite it once to record one")
@@ -2359,28 +2386,24 @@ object TableLog {
       val idx = logical.fieldNames.indexOf(name)
       require(idx >= 0, s"widenColumnType($table): no column '$name'")
       val cur = logical.fields(idx).dataType
-      if (cur == to) return base.version
-      require(widen(cur, to).contains(to),
-        s"widenColumnType($table, $name): ${cur.simpleString} -> " +
-          s"${to.simpleString} is not a lossless widening " +
-          "(byte<short<int<long, float<->double, int-or-narrower<" +
-          "double) — narrowing or cross-family changes need a full " +
-          "table rewrite")
-      base.dels.find(_.keyCol == name).foreach(d => sys.error(
-        s"widenColumnType($table, $name): a pending merge-on-read " +
-          s"delete sidecar (v${d.ver}) keys on this column — " +
-          "compact() to materialize it first"))
-      val evolved = org.apache.spark.sql.types.StructType(
-        logical.fields.updated(idx,
-          logical.fields(idx).copy(dataType = to)))
-      val version = base.version + 1
-      val r = ManifestRec(version, base.version, "schema", base.rows,
-        "delta", Nil, Nil, Nil, Nil, Nil, None, Some(evolved.json),
-        base.counters)
-      if (tryCommit(table, r)) committed = version
-    }
-    committed
-  }
+      // already that type: nothing to commit
+      Option.when(cur != to) {
+        require(widen(cur, to).contains(to),
+          s"widenColumnType($table, $name): ${cur.simpleString} -> " +
+            s"${to.simpleString} is not a lossless widening " +
+            "(byte<short<int<long, float<->double, int-or-narrower<" +
+            "double) — narrowing or cross-family changes need a full " +
+            "table rewrite")
+        base.dels.find(_.keyCol == name).foreach(d => sys.error(
+          s"widenColumnType($table, $name): a pending merge-on-read " +
+            s"delete sidecar (v${d.ver}) keys on this column — " +
+            "compact() to materialize it first"))
+        val evolved = org.apache.spark.sql.types.StructType(
+          logical.fields.updated(idx,
+            logical.fields(idx).copy(dataType = to)))
+        Change("schema", base.rows, Some(evolved.json), base.counters)
+      }
+    }.version
 
   private def schemaOpCommit(spark: SparkSession, table: String,
       kind: String, colName: String,
@@ -2390,9 +2413,7 @@ object TableLog {
       s"renameColumn on feed-enabled table $table: already-linked feed " +
         "files carry the old physical name and would read as null — " +
         "disable the feed (or re-seed consumers) first")
-    var committed = -1L
-    while (committed < 0) {
-      val base = snapshotOrFail(table)
+    commitOn(table) { (base, version) =>
       require(base.schemaJson.nonEmpty,
         s"$kind on $table: legacy table without a recorded schema — " +
           "rewrite it once to record one")
@@ -2416,15 +2437,11 @@ object TableLog {
         .fromJson(base.schemaJson.get)
         .asInstanceOf[org.apache.spark.sql.types.StructType]
       val evolved = evolve(logical)
-      val version = base.version + 1
-      // metadata-only commit: delta with no file changes; the gate
-      // folds the op into the carried history
-      val r = ManifestRec(version, base.version, "schema", base.rows,
-        "delta", Nil, Nil, Nil, Nil, Nil, None, Some(evolved.json),
-        base.counters, schemaOps = Seq(SchemaOp(version, kind, colName, to)))
-      if (tryCommit(table, r)) committed = version
-    }
-    committed
+      // metadata-only commit: no file changes; the gate folds the op
+      // into the carried history
+      Some(Change("schema", base.rows, Some(evolved.json), base.counters,
+        schemaOps = Seq(SchemaOp(version, kind, colName, to))))
+    }.version
   }
 
   /** Wall-clock commit timestamp (epoch millis) recorded in version
@@ -2436,7 +2453,7 @@ object TableLog {
   /** The newest committed version whose commit timestamp is at or
     * before `tsMs` — "the table as of yesterday 09:00" resolved to a
     * version number. Commit timestamps are stamped strictly monotonic
-    * at the commit gate (`tryCommit`), so ts order = version order and
+    * at the commit gate (`commit`), so ts order = version order and
     * the resolution is a BINARY SEARCH over the retained version
     * range: O(log versions) manifest reads, never a full log scan —
     * on a 100k-commit ingest history that is ~17 small-file reads.
@@ -2625,25 +2642,38 @@ object TableLog {
     require(!Files.isDirectory(logDir(dst)) ||
         listDir(logDir(dst)).isEmpty,
       s"cloneTable: $dst already has a commit log")
-    val all = (s.files.map(_.path) ++ s.dels.map(_.file.path)).distinct
-    all.foreach { rel =>
-      val from = Paths.get(src, rel)
-      val to = Paths.get(dst, rel)
-      Files.createDirectories(to.getParent)
-      if (!Files.exists(to))
-        try Files.createLink(to, from)
-        catch { case _: UnsupportedOperationException |
-            _: java.nio.file.FileSystemException =>
-          Files.copy(from, to) // cross-device: degrade to a real copy
-        }
-    }
+    (s.files.map(_.path) ++ s.dels.map(_.file.path)).distinct
+      .foreach(linkOrCopy(src, dst, _))
     Files.createDirectories(logDir(dst))
+    // dst's first manifest keeps src's version number and has no
+    // predecessor to chain onto: it starts a fresh, complete txn index
+    // (no prior writers in dst) and carries src's schema-op history and
+    // CHECK set whole
     val r = ManifestRec(s.version, s.version - 1, "clone", s.rows, "full",
       s.files, Nil, Nil, s.dels, Nil, None, s.schemaJson, s.counters,
+      tsMs = System.currentTimeMillis, txnComplete = true,
       schemaOps = s.schemaOps, checks = s.checks)
-    require(tryCommit(dst, r),
+    require(primitiveFor(dst).putIfAbsent(manifestPath(dst, s.version),
+        renderManifest(r).getBytes(UTF_8)),
       s"cloneTable: a concurrent clone already committed $dst")
     s.version
+  }
+
+  /** Hard-link table-relative `rel` from table root `src` into `dst`
+    * (zero copy: links pin inodes, so either side's vacuum deletes only
+    * its own directory entry), degrading to a real copy across devices.
+    * An existing target is left alone. */
+  private def linkOrCopy(src: String, dst: String, rel: String): Unit = {
+    val from = Paths.get(src, rel)
+    val to = Paths.get(dst, rel)
+    if (!Files.exists(to)) {
+      Files.createDirectories(to.getParent)
+      try Files.createLink(to, from)
+      catch { case _: UnsupportedOperationException |
+          _: java.nio.file.FileSystemException =>
+        Files.copy(from, to) // cross-device: degrade to a real copy
+      }
+    }
   }
 
   /** WRITE-AUDIT-PUBLISH: fast-forward `src` to everything committed
@@ -2698,18 +2728,8 @@ object TableLog {
         s"publishBranch: branch manifest v$v unreadable — aborting " +
           "before any commit"))
       ((r.files ++ r.adds).map(_.path) ++
-        (r.dels ++ r.delAdds).map(_.file.path)).distinct.foreach { rel =>
-        val from = Paths.get(branch, rel)
-        val to = Paths.get(src, rel)
-        if (!Files.exists(to)) {
-          Files.createDirectories(to.getParent)
-          try Files.createLink(to, from)
-          catch { case _: UnsupportedOperationException |
-              _: java.nio.file.FileSystemException =>
-            Files.copy(from, to) // cross-device: degrade to a copy
-          }
-        }
-      }
+        (r.dels ++ r.delAdds).map(_.file.path)).distinct
+        .foreach(linkOrCopy(branch, src, _))
     }
     (fork + 1 to bLatest).foreach { v =>
       val bytes = Files.readAllBytes(manifestPath(branch, v))
@@ -2804,9 +2824,7 @@ object TableLog {
     val bPaths = bSnap.files.map(_.path).toSet
     val addedB = bSnap.files.filterNot(f => basePaths(f.path))
     val removedB = basePaths.diff(bPaths)
-    var committed = -1L
-    while (committed < 0) {
-      val srcSnap = snapshotOrFail(src)
+    commitOn(src) { (srcSnap, version) =>
       require(srcSnap.schemaOps == base.schemaOps &&
           srcSnap.checks == base.checks,
         s"mergeBranch: $src changed schema ops or CHECK constraints " +
@@ -2855,19 +2873,7 @@ object TableLog {
       }
       // link the branch's new files in before the manifest that
       // references them can commit (uuid dir paths are collision-free)
-      addedB.foreach { f =>
-        val from = Paths.get(branch, f.path)
-        val to = Paths.get(src, f.path)
-        if (!Files.exists(to)) {
-          Files.createDirectories(to.getParent)
-          try Files.createLink(to, from)
-          catch { case _: UnsupportedOperationException |
-              _: java.nio.file.FileSystemException =>
-            Files.copy(from, to) // cross-device: degrade to a copy
-          }
-        }
-      }
-      val version = srcSnap.version + 1
+      addedB.foreach(f => linkOrCopy(branch, src, f.path))
       val files = srcSnap.files.filterNot(f => removedB(f.path)) ++
         addedB.map(_.copy(ver = version))
       val rows = srcSnap.rows + (bSnap.rows - base.rows)
@@ -2882,12 +2888,9 @@ object TableLog {
       // src's previous complete sets forward and treats these fields
       // as THIS commit's delta — passing the full lists would
       // duplicate every pre-fork op
-      val r = ManifestRec(version, srcSnap.version, "merge_branch",
-        rows, "full", files, Nil, Nil, srcSnap.dels, Nil, None,
-        srcSnap.schemaJson, counters)
-      if (tryCommit(src, r)) committed = version
-    }
-    committed
+      Some(Change("merge_branch", rows, srcSnap.schemaJson, counters,
+        files = Some(files)))
+    }.version
   }
 
   /** RESTORE the table to a historical version — the acting half of
@@ -2911,29 +2914,26 @@ object TableLog {
     require(!feedEnabled(table),
       s"restore($table): the append-only change feed cannot represent " +
         "a restore — remove the feed (and re-seed consumers) first")
-    var committed = -1L
-    while (committed < 0) {
-      val base = snapshotOrFail(table)
-      if (base.version == version) return base.version
-      val target = snapshotAt(table, version).getOrElse(sys.error(
-        s"restore($table): version $version is not resolvable " +
-          "(never committed, or vacuumed)"))
-      val missing = (target.files.map(_.path) ++
-        target.dels.map(_.file.path))
-        .filterNot(p => Files.exists(Paths.get(table, p)))
-      require(missing.isEmpty,
-        s"restore($table -> v$version): ${missing.size} data file(s) " +
-          s"already vacuumed (${missing.take(3).mkString(", ")}" +
-          s"${if (missing.size > 3) ", …" else ""}) — unrestorable")
-      enforceChecks(spark, table, base.checks,
-        readSnapshot(spark, table, target), "restore")
-      val v = base.version + 1
-      val r = ManifestRec(v, base.version, "restore", target.rows, "full",
-        target.files, Nil, Nil, target.dels, Nil, None, target.schemaJson,
-        base.counters, schemaOps = target.schemaOps)
-      if (tryCommit(table, r)) committed = v
-    }
-    committed
+    commitOn(table) { (base, _) =>
+      // restoring the current version is a no-op
+      Option.when(base.version != version) {
+        val target = snapshotAt(table, version).getOrElse(sys.error(
+          s"restore($table): version $version is not resolvable " +
+            "(never committed, or vacuumed)"))
+        val missing = (target.files.map(_.path) ++
+          target.dels.map(_.file.path))
+          .filterNot(p => Files.exists(Paths.get(table, p)))
+        require(missing.isEmpty,
+          s"restore($table -> v$version): ${missing.size} data file(s) " +
+            s"already vacuumed (${missing.take(3).mkString(", ")}" +
+            s"${if (missing.size > 3) ", …" else ""}) — unrestorable")
+        enforceChecks(spark, table, base.checks,
+          readSnapshot(spark, table, target), "restore")
+        Change("restore", target.rows, target.schemaJson, base.counters,
+          files = Some(target.files), dels = Some(target.dels),
+          schemaOps = target.schemaOps)
+      }
+    }.version
   }
 
   /** One-row operational summary — the DESCRIBE DETAIL face: current
@@ -3153,49 +3153,16 @@ object TableLog {
       .parquet(entries.map(f => s"$table/${f.path}"): _*)
     snapshot(table).foreach(b =>
       enforceChecks(spark, table, b.checks, written, "streaming append"))
-    var committed = -1L
-    while (committed < 0) {
-      val base = snapshot(table)
-      committedTxnVersion(table, txnId).foreach(return _)
-      val evolved = base.flatMap(_.schemaJson) match {
-        case Some(j) => Some(mergeEvolved(
-          org.apache.spark.sql.types.DataType.fromJson(j)
-            .asInstanceOf[org.apache.spark.sql.types.StructType],
-          written.schema).json)
-        case None if base.isEmpty => Some(written.schema.json)
-        case None => None
-      }
-      if (feedEnabled(table)) base.foreach { b =>
-        val baseNames = b.schemaJson.map(j =>
-          org.apache.spark.sql.types.DataType.fromJson(j)
-            .asInstanceOf[org.apache.spark.sql.types.StructType]
-            .fieldNames.toSet).getOrElse(Set.empty[String])
-        val freed = b.schemaOps.map(_.col).toSet
-        val readd = written.schema.fieldNames.filterNot(baseNames)
-          .filter(freed)
-        require(readd.isEmpty,
-          s"streaming append to feed-enabled $table: column(s) " +
-            s"${readd.mkString(", ")} re-add a name a schema op freed " +
-            "— use a fresh column name")
-      }
-      val version = base.map(_.version).getOrElse(0L) + 1
-      val rows = base.map(_.rows).getOrElse(0L) + newRows
-      val counters = base.map(_.counters).getOrElse(Map.empty[String, Long])
-      val action = if (base.isEmpty) "create" else "append"
-      val stamped = entries.map(_.copy(ver = version))
-      val r =
-        if (base.isEmpty || version % checkpointInterval == 0)
-          ManifestRec(version, version - 1, action, rows, "full",
-            base.map(_.files).getOrElse(Nil) ++ stamped, Nil, Nil,
-            base.map(_.dels).getOrElse(Nil), Nil,
-            Some(txnId), evolved, counters)
-        else
-          ManifestRec(version, version - 1, action, rows, "delta",
-            Nil, stamped, Nil, Nil, Nil, Some(txnId), evolved, counters)
-      if (tryCommit(table, r)) committed = version
+    val landed = commit(table, Some(txnId)) { (base, _) =>
+      val evolved = appendSchema(table, base, written.schema,
+        "streaming append", "use a fresh column name")
+      Some(Change(if (base.isEmpty) "create" else "append",
+        base.map(_.rows).getOrElse(0L) + newRows, evolved,
+        base.map(_.counters).getOrElse(Map.empty[String, Long]),
+        adds = entries))
     }
-    if (feedEnabled(table)) publishFeed(spark, table)
-    committed
+    if (landed.fresh && feedEnabled(table)) publishFeed(spark, table)
+    landed.version
   }
 
   /** EXACTLY-ONCE streaming ingest: each micro-batch appends through
@@ -4061,11 +4028,9 @@ object TableLog {
     // same idempotence contract as append: a replayed rewrite whose txn
     // already committed is a no-op
     txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
-    var committed = -1L
-    while (committed < 0) {
-      val base = snapshot(table).getOrElse(
+    commit(table, txnId) { (b, version) =>
+      val base = b.getOrElse(
         sys.error(s"rewrite of $table: no committed version"))
-      txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
       val out = fn(readSnapshot(spark, table, base))
       // an OVERWRITE's content is user-provided and uncertified —
       // CHECK constraints ride the staged-file stats pass as audits
@@ -4092,13 +4057,10 @@ object TableLog {
       // deletes — the transform read the snapshot MOR-aware (deleted
       // rows already absent) and every output file is newer than every
       // sidecar, so the sidecars are spent and vacuum may reclaim them
-      val r = ManifestRec(base.version + 1, base.version, action, rows,
-        "full", files.map(_.copy(ver = base.version + 1)), Nil, Nil,
-        Nil, Nil, txnId, Some(out.schema.json),
-        base.counters ++ counterSet)
-      if (tryCommit(table, r)) committed = r.version
-    }
-    committed
+      Some(Change(action, rows, Some(out.schema.json),
+        base.counters ++ counterSet,
+        files = Some(files.map(_.copy(ver = version))), dels = Some(Nil)))
+    }.version
   }
 
   /** Small-file compaction through the log: same narrow coalesce as
@@ -4139,9 +4101,7 @@ object TableLog {
     // layout-only, so legal on feed tables (same class as compact/
     // zorder: these rows were already delivered; publishFeed's
     // "compact" case publishes nothing)
-    var committed = -1L
-    while (committed < 0) {
-      val base = snapshotOrFail(table)
+    commitOn(table) { (base, _) =>
       val sized = base.files.map { f =>
         // manifest-carried size first (the streaming auto-OPTIMIZE
         // tick must not stat O(table) files per run); legacy entries
@@ -4159,40 +4119,25 @@ object TableLog {
       // (its `smallBytes` parameter packs them z-aware).
       val small = sized.filter { case (f, b) => b < smallBytes &&
         !f.stats.exists(st => isLayoutStat(st.col)) }
-      if (small.size < minFiles) return base.version
-      val nOut = math.max(1,
-        math.ceil(small.map(_._2).sum.toDouble / smallBytes).toInt)
-      val subset = small.map(_._1)
-      val (files, newRows) = writeDataFiles(spark, table,
-        morScan(spark, table, base, subset).coalesce(nOut),
-        statsCols, strStatsCols, bloomStatsCols)
-      val scanRows = liveRowsOf(spark, table, base, subset)
-      require(newRows == scanRows,
-        s"compactSmall audit failed for $table: packed $newRows rows " +
-          s"from $scanRows — not committing")
-      val version = base.version + 1
-      val stamped = files.map(_.copy(ver = version))
-      val removed = subset.map(_.path)
-      // sidecars whose every fenced file was packed away (morScan
-      // applied them) prune here too — full manifest when pruned
-      val rm = removed.toSet
-      val survivors = base.files.filterNot(f => rm(f.path)) ++ stamped
-      val liveDels = liveDelsAfter(base, survivors)
-      val r =
-        if (version % checkpointInterval == 0 ||
-            liveDels.size < base.dels.size)
-          ManifestRec(version, base.version, "compact", base.rows, "full",
-            survivors, Nil, Nil,
-            liveDels, Nil, None, base.schemaJson, base.counters)
-        else
-          ManifestRec(version, base.version, "compact", base.rows, "delta",
-            Nil, stamped, removed, Nil, Nil, None, base.schemaJson,
-            base.counters)
-      if (tryCommit(table, r)) committed = version
-      // CAS loss: re-read the base and re-pack; the orphaned file set
-      // is invisible garbage until vacuum
-    }
-    committed
+      // too few qualify: nothing to commit
+      Option.when(small.size >= minFiles) {
+        val nOut = math.max(1,
+          math.ceil(small.map(_._2).sum.toDouble / smallBytes).toInt)
+        val subset = small.map(_._1)
+        val (files, newRows) = writeDataFiles(spark, table,
+          morScan(spark, table, base, subset).coalesce(nOut),
+          statsCols, strStatsCols, bloomStatsCols)
+        val scanRows = liveRowsOf(spark, table, base, subset)
+        require(newRows == scanRows,
+          s"compactSmall audit failed for $table: packed $newRows rows " +
+            s"from $scanRows — not committing")
+        // sidecars whose every fenced file was packed away (morScan
+        // applied them) prune here too. CAS loss: re-read the base and
+        // re-pack; the orphaned file set is invisible garbage until vacuum
+        Change("compact", base.rows, base.schemaJson, base.counters,
+          adds = files, removes = subset.map(_.path), pruneDels = true)
+      }
+    }.version
   }
 
   /** Does pending sidecar `d` actually fence file `f` with a possible
@@ -4323,10 +4268,11 @@ object TableLog {
     * positions were applied by whatever rewrite or drop removed its
     * targets — and carrying it forever costs every future scan a
     * sidecar load and lets `maintainDvIfHeavy` count dead bytes toward
-    * an unnecessary rewrite. Callers that prune must write a FULL
-    * manifest when anything was pruned (a delta has no del-removal
-    * line). O(dels × files) stat comparisons, zero I/O; dels is
-    * maintenance-bounded, and the empty common case is free. */
+    * an unnecessary rewrite. `commit` applies it for a
+    * `Change.pruneDels` and writes a FULL manifest when anything was
+    * pruned (a delta has no del-removal line). O(dels × files) stat
+    * comparisons, zero I/O; dels is maintenance-bounded, and the empty
+    * common case is free. */
   private def liveDelsAfter(base: Snapshot,
       survivors: Seq[FileEntry]): Seq[DeleteEntry] =
     if (base.dels.isEmpty) Nil
@@ -4384,37 +4330,29 @@ object TableLog {
   def morMaintain(spark: SparkSession, table: String,
       maxSidecars: Int = 8, maxSidecarBytes: Long = Long.MaxValue,
       statsCols: Seq[String] = Nil, strStatsCols: Seq[String] = Nil,
-      bloomStatsCols: Seq[String] = Nil): Long = {
-    var committed = -1L
-    while (committed < 0) {
-      val base = snapshotOrFail(table)
-      if (base.dels.size <= maxSidecars &&
-          base.dels.map(d => fileBytes(table, d.file)).sum <=
-            maxSidecarBytes)
-        return base.version
-      val affected = base.files.filter(f =>
-        base.dels.exists(d => sidecarFences(base, f, d)))
-      val (files, newRows) =
-        if (affected.isEmpty) (Nil, 0L)
-        else writeDataFiles(spark, table,
-          morScan(spark, table, base, affected),
-          statsCols, strStatsCols, bloomStatsCols)
-      require(newRows <= base.rows,
-        s"morMaintain audit failed for $table: materialized $newRows " +
-          s"rows > table rows ${base.rows} — not committing")
-      val version = base.version + 1
-      val rm = affected.map(_.path).toSet
-      // full manifest: clearing pending sidecars needs the complete
-      // set stated (a delta can only ADD sidecars)
-      val r = ManifestRec(version, base.version, "mor_materialize",
-        base.rows, "full",
-        base.files.filterNot(f => rm(f.path)) ++
-          files.map(_.copy(ver = version)),
-        Nil, Nil, Nil, Nil, None, base.schemaJson, base.counters)
-      if (tryCommit(table, r)) committed = version
-    }
-    committed
-  }
+      bloomStatsCols: Seq[String] = Nil): Long =
+    commitOn(table) { (base, _) =>
+      // within bounds: nothing to materialize
+      Option.when(base.dels.size > maxSidecars ||
+          base.dels.map(d => fileBytes(table, d.file)).sum >
+            maxSidecarBytes) {
+        val affected = base.files.filter(f =>
+          base.dels.exists(d => sidecarFences(base, f, d)))
+        val (files, newRows) =
+          if (affected.isEmpty) (Nil, 0L)
+          else writeDataFiles(spark, table,
+            morScan(spark, table, base, affected),
+            statsCols, strStatsCols, bloomStatsCols)
+        require(newRows <= base.rows,
+          s"morMaintain audit failed for $table: materialized $newRows " +
+            s"rows > table rows ${base.rows} — not committing")
+        // clearing pending sidecars restates the complete (empty) set,
+        // which only a full manifest can carry
+        Change("mor_materialize", base.rows, base.schemaJson,
+          base.counters, adds = files, removes = affected.map(_.path),
+          dels = Some(Nil))
+      }
+    }.version
 
   /** Write a frame's data files into `table` WITHOUT committing —
     * the staging half of the catalog's ATOMIC CTAS/RTAS
@@ -4436,31 +4374,20 @@ object TableLog {
     * would DROP the table and erase its history instead). CAS-retries
     * like every commit; a racing create loses loudly. */
   private[graft] def commitStaged(table: String, files: Seq[FileEntry],
-      rows: Long, schemaJson: String, replace: Boolean): Long = {
-    var committed = -1L
-    while (committed < 0) {
-      snapshot(table) match {
-        case None =>
-          val r = ManifestRec(1, 0, "create", rows, "full",
-            files.map(_.copy(ver = 1)), Nil, Nil, Nil, Nil, None,
-            Some(schemaJson), Map.empty)
-          if (tryCommit(table, r)) committed = 1
-        case Some(b) =>
-          require(replace, s"commitStaged($table): table already has " +
-            s"${b.version} committed version(s) and this stage was a " +
-            "plain CREATE — a concurrent writer won the race")
-          require(!feedEnabled(table),
-            s"commitStaged($table): the append-only change feed cannot " +
-              "represent a whole-table replace")
-          val version = b.version + 1
-          val r = ManifestRec(version, b.version, "overwrite", rows,
-            "full", files.map(_.copy(ver = version)), Nil, Nil, Nil,
-            Nil, None, Some(schemaJson), b.counters)
-          if (tryCommit(table, r)) committed = version
+      rows: Long, schemaJson: String, replace: Boolean): Long =
+    commit(table) { (b, version) =>
+      b.foreach { cur =>
+        require(replace, s"commitStaged($table): table already has " +
+          s"${cur.version} committed version(s) and this stage was a " +
+          "plain CREATE — a concurrent writer won the race")
+        require(!feedEnabled(table),
+          s"commitStaged($table): the append-only change feed cannot " +
+            "represent a whole-table replace")
       }
-    }
-    committed
-  }
+      Some(Change(if (b.isEmpty) "create" else "overwrite", rows,
+        Some(schemaJson), b.map(_.counters).getOrElse(Map.empty[String, Long]),
+        files = Some(files.map(_.copy(ver = version))), dels = Some(Nil)))
+    }.version
 
   /** FOLD pending MOR delete sidecars — the cheap maintenance step
     * between `morMaintain` materializations: many small sidecar key
@@ -4489,10 +4416,7 @@ object TableLog {
     * when no group has ≥ 2 members. */
   def morFold(spark: SparkSession, table: String): Long = {
     import org.apache.spark.sql.functions.col
-    var committed = -1L
-    while (committed < 0) {
-      val base = snapshotOrFail(table)
-      if (base.dels.size < 2) return base.version
+    commitOn(table) { (base, _) =>
       val fileVers = base.files.map(_.ver).toSet
       def blocked(v1: Long, v2: Long): Boolean =
         (v1 until v2).exists(fileVers)
@@ -4513,57 +4437,53 @@ object TableLog {
             }
             runs.map(_.toSeq).toSeq
         }
-      if (!groups.exists(_.size >= 2) && dvD.size < 2) return base.version
-      // Folded entries are stamped at the run's MAX member version,
-      // not the min (round-20 race fix). Read-equivalent under the run
-      // rule: no live file has ver in [vMin, vMax) (`blocked`), files
-      // AT vMax are excluded by the fence's `f.ver >= d.ver` at either
-      // endpoint, and deletion vectors ignore version entirely at
-      // read. But the COMMIT fence is version-keyed: in-flight
-      // positional statements check `dels.filter(_.ver > planVersion)`
-      // (writeDeltaCommit / replaceFilesCommit) — a member committed
-      // AFTER a statement's planVersion, folded and re-stamped at
-      // vMin <= planVersion, would escape that fence and let the
-      // statement commit against positions its scan never saw
-      // (silent row resurrection on COW rewrites). vMax keeps every
-      // member that was fence-visible fence-visible through the fold.
-      val folded: Seq[DeleteEntry] = groups.flatMap { g =>
-        if (g.size < 2) g
-        else {
-          val k = g.head.keyCol
-          val vMax = g.map(_.ver).max
-          val keys = readSidecars(spark,
-            g.map(d => s"$table/${d.file.path}"),
-            sidecarHint(base.schemaJson, k))
-            .select(col(k)).distinct().coalesce(1)
-          val isString = keys.schema(k).dataType ==
-            org.apache.spark.sql.types.StringType
-          val (fs, _) = writeDataFiles(spark, table, keys,
-            if (isString) Nil else Seq(k),
-            if (isString) Seq(k) else Nil, Nil)
-          fs.map(f => DeleteEntry(f.copy(ver = vMax), k, vMax))
-        }
-      } ++ (if (dvD.size < 2) dvD
-        else {
-          val vMax = dvD.map(_.ver).max
-          val pairs = spark.read.schema(dvPairSchema).parquet(
-            dvD.map(d => s"$table/${d.file.path}"): _*)
-            .select(col(DvFileField), col(DvPosField)).distinct()
-            .coalesce(1)
-          val (fs, _) = writeDataFiles(spark, table, pairs,
-            Seq(DvPosField), Seq(DvFileField), Nil)
-          fs.map(f => DeleteEntry(f.copy(ver = vMax), DvKeyCol, vMax))
-        })
-      val version = base.version + 1
-      // schemaOps/checks stay default-Nil: the commit gate carries the
-      // previous complete sets forward and treats these fields as THIS
-      // commit's delta — passing the base lists would duplicate them
-      val r = ManifestRec(version, base.version, "mor_fold",
-        base.rows, "full", base.files, Nil, Nil, folded, Nil, None,
-        base.schemaJson, base.counters)
-      if (tryCommit(table, r)) committed = version
-    }
-    committed
+      // fewer than two foldable sidecars: nothing to fold
+      Option.when(groups.exists(_.size >= 2) || dvD.size >= 2) {
+        // Folded entries are stamped at the run's MAX member version,
+        // not the min (round-20 race fix). Read-equivalent under the run
+        // rule: no live file has ver in [vMin, vMax) (`blocked`), files
+        // AT vMax are excluded by the fence's `f.ver >= d.ver` at either
+        // endpoint, and deletion vectors ignore version entirely at
+        // read. But the COMMIT fence is version-keyed: in-flight
+        // positional statements check `dels.filter(_.ver > planVersion)`
+        // (writeDeltaCommit / replaceFilesCommit) — a member committed
+        // AFTER a statement's planVersion, folded and re-stamped at
+        // vMin <= planVersion, would escape that fence and let the
+        // statement commit against positions its scan never saw
+        // (silent row resurrection on COW rewrites). vMax keeps every
+        // member that was fence-visible fence-visible through the fold.
+        val folded: Seq[DeleteEntry] = groups.flatMap { g =>
+          if (g.size < 2) g
+          else {
+            val k = g.head.keyCol
+            val vMax = g.map(_.ver).max
+            val keys = readSidecars(spark,
+              g.map(d => s"$table/${d.file.path}"),
+              sidecarHint(base.schemaJson, k))
+              .select(col(k)).distinct().coalesce(1)
+            val isString = keys.schema(k).dataType ==
+              org.apache.spark.sql.types.StringType
+            val (fs, _) = writeDataFiles(spark, table, keys,
+              if (isString) Nil else Seq(k),
+              if (isString) Seq(k) else Nil, Nil)
+            fs.map(f => DeleteEntry(f.copy(ver = vMax), k, vMax))
+          }
+        } ++ (if (dvD.size < 2) dvD
+          else {
+            val vMax = dvD.map(_.ver).max
+            val pairs = spark.read.schema(dvPairSchema).parquet(
+              dvD.map(d => s"$table/${d.file.path}"): _*)
+              .select(col(DvFileField), col(DvPosField)).distinct()
+              .coalesce(1)
+            val (fs, _) = writeDataFiles(spark, table, pairs,
+              Seq(DvPosField), Seq(DvFileField), Nil)
+            fs.map(f => DeleteEntry(f.copy(ver = vMax), DvKeyCol, vMax))
+          })
+        // the folded set restates the delete list: a full manifest
+        Change("mor_fold", base.rows, base.schemaJson, base.counters,
+          dels = Some(folded))
+      }
+    }.version
   }
 
   /** Declarative maintenance policy for `maintain` — which of the
@@ -4807,9 +4727,7 @@ object TableLog {
       statsCols: Seq[String] = Nil, strStatsCols: Seq[String] = Nil,
       bloomStatsCols: Seq[String] = Nil, smallBytes: Long = 0L): Long = {
     import org.apache.spark.sql.functions.col
-    var committed = -1L
-    while (committed < 0) {
-      val base = snapshotOrFail(table)
+    commitOn(table) { (base, _) =>
       def isZ(n: String) = isLayoutStat(n)
       val clustered = base.files.filter(_.stats.exists(st => isZ(st.col)))
       if (clustered.isEmpty) sys.error(
@@ -4827,85 +4745,74 @@ object TableLog {
         isZ(st.col))) ++
         (if (smallBytes <= 0) Nil
          else clustered.filter(f => fileBytes(table, f) < smallBytes))
-      if (unclustered.size < minFiles) return base.version
-      val parts = spec.split('|')
-      val (physCols, zRanges) =
-        if (parts(0) == "z2" || parts(0) == "h2")
-          (Seq(parts(1), parts(2)),
-            Seq((parts(3).toLong, parts(4).toLong),
-              (parts(5).toLong, parts(6).toLong)))
-        else
-          (Seq(parts(1), parts(2), parts(3)),
-            Seq((parts(4).toLong, parts(5).toLong),
-              (parts(6).toLong, parts(7).toLong),
-              (parts(8).toLong, parts(9).toLong)))
-      // spec columns are PHYSICAL as of the clustering rewrite;
-      // re-resolve each against the current schema so a rename since
-      // then clusters (and stamps) under today's logical names
-      val logicalNames: Seq[String] = {
-        val cols = tableSchemaOf(table).map(_.fieldNames.toSeq)
-          .getOrElse(physCols)
-        physCols.map(p => cols.find(l =>
-          statNameFor(base, l)(refFile).contains(p)).getOrElse(sys.error(
-          s"zOrderMaintain($table): clustered column '$p' no longer " +
-            "resolves (renamed away or dropped) — re-run zOrder with " +
-            "the current columns")))
+      // too few unclustered files: nothing to maintain
+      Option.when(unclustered.size >= minFiles) {
+        val parts = spec.split('|')
+        val (physCols, zRanges) =
+          if (parts(0) == "z2" || parts(0) == "h2")
+            (Seq(parts(1), parts(2)),
+              Seq((parts(3).toLong, parts(4).toLong),
+                (parts(5).toLong, parts(6).toLong)))
+          else
+            (Seq(parts(1), parts(2), parts(3)),
+              Seq((parts(4).toLong, parts(5).toLong),
+                (parts(6).toLong, parts(7).toLong),
+                (parts(8).toLong, parts(9).toLong)))
+        // spec columns are PHYSICAL as of the clustering rewrite;
+        // re-resolve each against the current schema so a rename since
+        // then clusters (and stamps) under today's logical names
+        val logicalNames: Seq[String] = {
+          val cols = tableSchemaOf(table).map(_.fieldNames.toSeq)
+            .getOrElse(physCols)
+          physCols.map(p => cols.find(l =>
+            statNameFor(base, l)(refFile).contains(p)).getOrElse(sys.error(
+            s"zOrderMaintain($table): clustered column '$p' no longer " +
+              "resolves (renamed away or dropped) — re-run zOrder with " +
+              "the current columns")))
+        }
+        import graft.operators.LayoutOps.norm16
+        def z = {
+          val n = logicalNames.zip(zRanges).map { case (c, (lo, hi)) =>
+            norm16(col(c), lo, hi) }
+          if (parts(0) == "h2")
+            graft.functions.HilbertLong.hilbert(n(0), n(1))
+          else if (parts(0) == "h3")
+            graft.functions.Hilbert3.hilbert3(n(0), n(1), n(2))
+          else if (n.size == 2) graft.functions.ZOrderLong.zOrder(n(0), n(1))
+          else graft.functions.ZOrderLong.zOrder3(n(0), n(1), n(2))
+        }
+        val newSpec =
+          if (parts(0) == "h2")
+            h2StatName(logicalNames(0), logicalNames(1),
+              zRanges(0), zRanges(1))
+          else if (parts(0) == "h3")
+            h3StatName(logicalNames(0), logicalNames(1), logicalNames(2),
+              zRanges(0), zRanges(1), zRanges(2))
+          else if (logicalNames.size == 2)
+            z2StatName(logicalNames(0), logicalNames(1),
+              zRanges(0), zRanges(1))
+          else
+            z3StatName(logicalNames(0), logicalNames(1), logicalNames(2),
+              zRanges(0), zRanges(1), zRanges(2))
+        val bytes = unclustered.map(fileBytes(table, _)).sum
+        val nOut = math.max(1,
+          math.ceil(bytes.toDouble / targetBytes).toInt)
+        val (files, newRows) = writeDataFiles(spark, table,
+          morScan(spark, table, base, unclustered)
+            .withColumn("__z", z)
+            .repartitionByRange(nOut, col("__z"))
+            .sortWithinPartitions("__z")
+            .drop("__z"),
+          (statsCols ++ logicalNames).distinct, strStatsCols,
+          bloomStatsCols, derivedStats = Seq(newSpec -> z))
+        val scanRows = liveRowsOf(spark, table, base, unclustered)
+        require(newRows == scanRows,
+          s"zOrderMaintain audit failed for $table: clustered $newRows " +
+            s"rows from $scanRows — not committing")
+        Change("zorder", base.rows, base.schemaJson, base.counters,
+          adds = files, removes = unclustered.map(_.path))
       }
-      import graft.operators.LayoutOps.norm16
-      def z = {
-        val n = logicalNames.zip(zRanges).map { case (c, (lo, hi)) =>
-          norm16(col(c), lo, hi) }
-        if (parts(0) == "h2")
-          graft.functions.HilbertLong.hilbert(n(0), n(1))
-        else if (parts(0) == "h3")
-          graft.functions.Hilbert3.hilbert3(n(0), n(1), n(2))
-        else if (n.size == 2) graft.functions.ZOrderLong.zOrder(n(0), n(1))
-        else graft.functions.ZOrderLong.zOrder3(n(0), n(1), n(2))
-      }
-      val newSpec =
-        if (parts(0) == "h2")
-          h2StatName(logicalNames(0), logicalNames(1),
-            zRanges(0), zRanges(1))
-        else if (parts(0) == "h3")
-          h3StatName(logicalNames(0), logicalNames(1), logicalNames(2),
-            zRanges(0), zRanges(1), zRanges(2))
-        else if (logicalNames.size == 2)
-          z2StatName(logicalNames(0), logicalNames(1),
-            zRanges(0), zRanges(1))
-        else
-          z3StatName(logicalNames(0), logicalNames(1), logicalNames(2),
-            zRanges(0), zRanges(1), zRanges(2))
-      val bytes = unclustered.map(fileBytes(table, _)).sum
-      val nOut = math.max(1,
-        math.ceil(bytes.toDouble / targetBytes).toInt)
-      val (files, newRows) = writeDataFiles(spark, table,
-        morScan(spark, table, base, unclustered)
-          .withColumn("__z", z)
-          .repartitionByRange(nOut, col("__z"))
-          .sortWithinPartitions("__z")
-          .drop("__z"),
-        (statsCols ++ logicalNames).distinct, strStatsCols,
-        bloomStatsCols, derivedStats = Seq(newSpec -> z))
-      val scanRows = liveRowsOf(spark, table, base, unclustered)
-      require(newRows == scanRows,
-        s"zOrderMaintain audit failed for $table: clustered $newRows " +
-          s"rows from $scanRows — not committing")
-      val version = base.version + 1
-      val stamped = files.map(_.copy(ver = version))
-      val removed = unclustered.map(_.path)
-      val r =
-        if (version % checkpointInterval == 0) {
-          val rm = removed.toSet
-          ManifestRec(version, base.version, "zorder", base.rows, "full",
-            base.files.filterNot(f => rm(f.path)) ++ stamped, Nil, Nil,
-            base.dels, Nil, None, base.schemaJson, base.counters)
-        } else
-          ManifestRec(version, base.version, "zorder", base.rows,
-            "delta", Nil, stamped, removed, Nil, Nil, None,
-            base.schemaJson, base.counters)
-      if (tryCommit(table, r)) committed = version
-    }
-    committed
+    }.version
   }
 
   /** MULTI-DIMENSIONAL box prune: given per-column long range
@@ -5110,48 +5017,30 @@ object TableLog {
         "capture deletes as typed rows, or remove " +
         s"${feedDir(table)} to disable the feed")
     txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
-    var committed = -1L
-    while (committed < 0) {
-      val base = snapshotOrFail(table)
-      txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
+    val landed = commitOn(table, txnId) { (base, _) =>
       val affected = affectedOf(base)
-      if (affected.isEmpty) return base.version
-      val affectedPaths = affected.map(_.path)
-      // MOR-aware: pending delete sidecars apply to the scan, so a
-      // rewrite can never resurrect a merge-on-read-deleted row
-      val scan = morScan(spark, table, base, affected)
-      val scanRows = liveRowsOf(spark, table, base, affected)
-      val (newFiles, newRows) = writeDataFiles(spark, table, keep(scan),
-        statsCols, strStatsCols, bloomStatsCols)
-      require(newRows <= scanRows,
-        s"delete audit failed for $table: rewrite produced $newRows " +
-          s"rows from $scanRows — not committing")
-      val rows = base.rows - (scanRows - newRows)
-      val version = base.version + 1
-      val stamped = newFiles.map(_.copy(ver = version))
-      // mirror append's checkpoint cadence so delta chains stay
-      // bounded; sidecars whose every fenced file this rewrite
-      // replaced (morScan applied them) are pruned — full manifest
-      // when anything pruned (liveDelsAfter)
-      val rm = affectedPaths.toSet
-      val survivors = base.files.filterNot(f => rm(f.path)) ++ stamped
-      val liveDels = liveDelsAfter(base, survivors)
-      val r =
-        if (version % checkpointInterval == 0 ||
-            liveDels.size < base.dels.size)
-          ManifestRec(version, base.version, "delete", rows, "full",
-            survivors, Nil, Nil,
-            liveDels, Nil, txnId, base.schemaJson, base.counters)
-        else
-          ManifestRec(version, base.version, "delete", rows, "delta",
-            Nil, stamped, affectedPaths, Nil, Nil, txnId, base.schemaJson,
-            base.counters)
-      if (tryCommit(table, r)) committed = version
+      // no file can hold a match: nothing to commit
+      Option.when(affected.nonEmpty) {
+        // MOR-aware: pending delete sidecars apply to the scan, so a
+        // rewrite can never resurrect a merge-on-read-deleted row
+        val scan = morScan(spark, table, base, affected)
+        val scanRows = liveRowsOf(spark, table, base, affected)
+        val (newFiles, newRows) = writeDataFiles(spark, table, keep(scan),
+          statsCols, strStatsCols, bloomStatsCols)
+        require(newRows <= scanRows,
+          s"delete audit failed for $table: rewrite produced $newRows " +
+            s"rows from $scanRows — not committing")
+        // sidecars whose every fenced file this rewrite replaced
+        // (morScan applied them) are pruned
+        Change("delete", base.rows - (scanRows - newRows), base.schemaJson,
+          base.counters, adds = newFiles, removes = affected.map(_.path),
+          pruneDels = true)
+      }
     }
     // typed-feed capture of the deleted rows; crash before the marker
     // is healed by the next publish (same window as append's)
-    if (feedEnabled(table)) publishFeed(spark, table)
-    committed
+    if (landed.fresh && feedEnabled(table)) publishFeed(spark, table)
+    landed.version
   }
 
   /** PREDICATE OVERWRITE (Delta's `replaceWhere` / Spark's
@@ -5214,14 +5103,13 @@ object TableLog {
       checkAudits(table, checks0, "replaceWhere")
     val (newFiles, newRows) = writeDataFiles(spark, table, df,
       statsCols, strStatsCols, bloomStatsCols, audits = audits)
-    var committed = -1L
-    while (committed < 0) {
-      val base = snapshotOrFail(table)
-      txnId.flatMap(committedTxnVersion(table, _)).foreach { v =>
-        dropStaged(newFiles); return v
-      }
+    // the keep-side rewrite of the attempt in flight. An attempt that
+    // loses the CAS planned it against a stale base, so the next attempt
+    // drops it before re-planning (the failed manifest never referenced it)
+    var kept = Seq.empty[FileEntry]
+    val landed = commitOn(table, txnId) { (base, _) =>
+      dropStaged(kept)
       val affected = prune(base)
-      val affectedPaths = affected.map(_.path).toSet
       // keep-side rewrite of the affected files (MOR-aware); NULL
       // predicate rows are kept, like a SQL DELETE
       val (keptFiles, keptRows) =
@@ -5233,6 +5121,7 @@ object TableLog {
               org.apache.spark.sql.functions.lit(true))),
             statsCols, strStatsCols, bloomStatsCols)
         }
+      kept = keptFiles
       // live row count of the affected slice, metadata-side where
       // provable (see liveRowsOf)
       val scanRows = liveRowsOf(spark, table, base, affected)
@@ -5242,30 +5131,14 @@ object TableLog {
           s"rewrite produced $keptRows rows from $scanRows — not " +
           "committing (staged files removed)")
       }
-      val version = base.version + 1
-      val stamped = (keptFiles ++ newFiles).map(_.copy(ver = version))
-      val rows = base.rows - (scanRows - keptRows) + newRows
-      val survivors =
-        base.files.filterNot(f => affectedPaths(f.path)) ++ stamped
-      val liveDels = liveDelsAfter(base, survivors)
-      val r =
-        if (version % checkpointInterval == 0 ||
-            liveDels.size < base.dels.size)
-          ManifestRec(version, base.version, "replace", rows, "full",
-            survivors, Nil, Nil, liveDels, Nil, txnId, base.schemaJson,
-            base.counters)
-        else
-          ManifestRec(version, base.version, "replace", rows, "delta",
-            Nil, stamped, affectedPaths.toSeq.sorted, Nil, Nil, txnId,
-            base.schemaJson, base.counters)
-      if (tryCommit(table, r)) committed = version
-      // lost race: this attempt's keep-side rewrite was planned
-      // against a stale base and is re-planned next iteration — the
-      // failed manifest never referenced it
-      else dropStaged(keptFiles)
+      Some(Change("replace", base.rows - (scanRows - keptRows) + newRows,
+        base.schemaJson, base.counters, adds = keptFiles ++ newFiles,
+        removes = affected.map(_.path).distinct.sorted, pruneDels = true))
     }
-    if (feedEnabled(table)) publishFeed(spark, table)
-    committed
+    // a racing writer committed this txn: nothing staged here is ours
+    if (!landed.fresh) { dropStaged(kept); dropStaged(newFiles) }
+    else if (feedEnabled(table)) publishFeed(spark, table)
+    landed.version
   }
 
   /** MERGE-ON-READ delete: remove every row whose `keyCol` equals a
@@ -5310,10 +5183,7 @@ object TableLog {
         if (isString) Nil else Seq(keyCol),
         if (isString) Seq(keyCol) else Nil, Nil)
       val affectedOf = keyPruneOf(spark, keyDf, keyCol, isString)
-      var committed = -1L
-      while (committed < 0) {
-        val base = snapshotOrFail(table)
-        txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
+      val landed = commitOn(table, txnId) { (base, version) =>
         val candidates = affectedOf(base)
         // matched-row count: key column only (columnar), MOR-aware so
         // an already-deleted key is not double-counted
@@ -5322,25 +5192,14 @@ object TableLog {
           else morScan(spark, table, base, candidates)
             .select(col(keyCol))
             .join(keyDf, Seq(keyCol), "left_semi").count()
-        if (matched == 0) return base.version
-        val version = base.version + 1
-        val newDels = delFiles.map(f =>
-          DeleteEntry(f.copy(ver = version), keyCol, version))
-        val rows = base.rows - matched
-        val r =
-          if (version % checkpointInterval == 0)
-            ManifestRec(version, base.version, "delete_mor", rows, "full",
-              base.files, Nil, Nil, base.dels ++ newDels, Nil, txnId,
-              base.schemaJson, base.counters)
-          else
-            ManifestRec(version, base.version, "delete_mor", rows, "delta",
-              Nil, Nil, Nil, Nil, newDels, txnId, base.schemaJson,
-              base.counters)
-        if (tryCommit(table, r)) committed = version
+        // keys matching no row: nothing to commit
+        Option.when(matched > 0)(Change("delete_mor", base.rows - matched,
+          base.schemaJson, base.counters, delAdds = delFiles.map(f =>
+            DeleteEntry(f.copy(ver = version), keyCol, version))))
       }
       // typed-feed capture of the deleted rows (CDC tables only)
-      if (feedEnabled(table)) publishFeed(spark, table)
-      committed
+      if (landed.fresh && feedEnabled(table)) publishFeed(spark, table)
+      landed.version
     } finally { keyDf.unpersist(); () }
   }
 
@@ -5398,63 +5257,61 @@ object TableLog {
         "capture deletes as typed rows, or remove " +
         s"${feedDir(table)} to disable the feed")
     txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
-    var committed = -1L
-    while (committed < 0) {
-      maintainDvIfHeavy(spark, table, maxPendingDvBytes, statsCols,
-        strStatsCols, bloomStatsCols)
-      val base = snapshotOrFail(table)
-      txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
-      if (base.files.isEmpty) return base.version
-      val kept = dvPrune(spark, table, base, cond)
-      if (kept.isEmpty) return base.version
-      val matched = morScan(spark, table, base, kept, pos = true)
-        .where(cond)
-        .select(col(GraftFileCol).as(DvFileField),
-          col(GraftPosCol).as(DvPosField)).cache()
-      try {
-        val cnt = matched.count()
-        if (cnt == 0) return base.version
-        if (cnt > maxPositions) {
-          require(cowFallback,
-            s"deleteDv on $table: $cnt matched rows exceed maxPositions " +
-              s"($maxPositions) — a deletion vector this wide would " +
-              "weigh down every read plan; use deleteWhere " +
-              "(copy-on-write) or deleteMor (key sidecar) for bulk " +
-              "deletes, or raise the bound")
-          // over-cap bulk delete: step over the wall the planner can
-          // see past — run the SAME predicate as a copy-on-write
-          // rewrite of the pruned files. NULL predicate keeps, like
-          // SQL DELETE.
-          logger.warn(s"deleteDv on $table: $cnt matched rows exceed " +
-            s"maxPositions ($maxPositions) — falling back to the " +
-            "copy-on-write rewrite (deleteWhere path)")
-          return deleteImpl(spark, table,
-            b => dvPrune(spark, table, b, cond),
-            df => df.where(not(coalesce(cond, lit(false)))),
-            statsCols, strStatsCols, txnId, bloomStatsCols)
-        }
-        val (delFiles, _) = writeDataFiles(spark, table,
-          matched.coalesce(1), Seq(DvPosField), Seq(DvFileField), Nil)
-        val version = base.version + 1
-        val newDels = delFiles.map(f =>
-          DeleteEntry(f.copy(ver = version), DvKeyCol, version))
-        val rows = base.rows - cnt
-        val r =
-          if (version % checkpointInterval == 0)
-            ManifestRec(version, base.version, "delete_dv", rows, "full",
-              base.files, Nil, Nil, base.dels ++ newDels, Nil, txnId,
-              base.schemaJson, base.counters)
-          else
-            ManifestRec(version, base.version, "delete_dv", rows, "delta",
-              Nil, Nil, Nil, Nil, newDels, txnId, base.schemaJson,
-              base.counters)
-        if (tryCommit(table, r)) committed = version
-        // CAS loss: positions were computed against a stale snapshot —
-        // recompute everything; the orphaned sidecar is vacuumed
-      } finally { matched.unpersist(); () }
+    maintainDvIfHeavy(spark, table, maxPendingDvBytes, statsCols,
+      strStatsCols, bloomStatsCols)
+    // matched rows past `maxPositions`: the copy-on-write fallback runs
+    // instead of a commit here
+    var overCap = 0L
+    val landed = commitOn(table, txnId) { (base, version) =>
+      val kept =
+        if (base.files.isEmpty) Nil else dvPrune(spark, table, base, cond)
+      // no file can hold a match: nothing to commit
+      if (kept.isEmpty) None
+      else {
+        val matched = morScan(spark, table, base, kept, pos = true)
+          .where(cond)
+          .select(col(GraftFileCol).as(DvFileField),
+            col(GraftPosCol).as(DvPosField)).cache()
+        try {
+          val cnt = matched.count()
+          if (cnt == 0) None
+          else if (cnt > maxPositions) {
+            require(cowFallback,
+              s"deleteDv on $table: $cnt matched rows exceed maxPositions " +
+                s"($maxPositions) — a deletion vector this wide would " +
+                "weigh down every read plan; use deleteWhere " +
+                "(copy-on-write) or deleteMor (key sidecar) for bulk " +
+                "deletes, or raise the bound")
+            overCap = cnt
+            None
+          } else {
+            // CAS loss: positions were computed against a stale
+            // snapshot — the next attempt recomputes everything; the
+            // orphaned sidecar is vacuumed
+            val (delFiles, _) = writeDataFiles(spark, table,
+              matched.coalesce(1), Seq(DvPosField), Seq(DvFileField), Nil)
+            Some(Change("delete_dv", base.rows - cnt, base.schemaJson,
+              base.counters, delAdds = delFiles.map(f =>
+                DeleteEntry(f.copy(ver = version), DvKeyCol, version))))
+          }
+        } finally { matched.unpersist(); () }
+      }
     }
-    if (feedEnabled(table)) publishFeed(spark, table)
-    committed
+    if (overCap > 0) {
+      // over-cap bulk delete: step over the wall the planner can see
+      // past — run the SAME predicate as a copy-on-write rewrite of the
+      // pruned files. NULL predicate keeps, like SQL DELETE.
+      logger.warn(s"deleteDv on $table: $overCap matched rows exceed " +
+        s"maxPositions ($maxPositions) — falling back to the " +
+        "copy-on-write rewrite (deleteWhere path)")
+      deleteImpl(spark, table,
+        b => dvPrune(spark, table, b, cond),
+        df => df.where(not(coalesce(cond, lit(false)))),
+        statsCols, strStatsCols, txnId, bloomStatsCols)
+    } else {
+      if (landed.fresh && feedEnabled(table)) publishFeed(spark, table)
+      landed.version
+    }
   }
 
   /** POSITIONAL merge-on-read update — `updateWhere`'s set-clause
@@ -5482,70 +5339,60 @@ object TableLog {
         s"enableCdcFeed($table) to capture it as typed rows, or remove " +
         s"${feedDir(table)} to disable the feed")
     txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
-    var committed = -1L
-    while (committed < 0) {
-      maintainDvIfHeavy(spark, table, maxPendingDvBytes, statsCols,
-        strStatsCols, bloomStatsCols)
-      val base = snapshotOrFail(table)
-      txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
-      if (base.files.isEmpty) return base.version
-      val kept = dvPrune(spark, table, base, cond)
-      if (kept.isEmpty) return base.version
-      val scan = morScan(spark, table, base, kept, pos = true)
-      val dataCols = scan.columns.toSeq
-        .filterNot(c => c == GraftFileCol || c == GraftPosCol)
-      set.keys.foreach(k => require(dataCols.contains(k),
-        s"updateDv: set column $k not in $table's schema"))
-      val matched = scan.where(cond).cache()
-      try {
-        val cnt = matched.count()
-        if (cnt == 0) return base.version
-        require(cnt <= maxPositions,
-          s"updateDv on $table: $cnt matched rows exceed maxPositions " +
-            s"($maxPositions) — use updateWhere (copy-on-write) or " +
-            "updateMor (key sidecar) for bulk updates, or raise the bound")
-        // new images: ONE projection off the matched scan — every set
-        // RHS reads the pre-update row (the updateWhere contract)
-        val updated = matched.select(dataCols.map(k =>
-          set.get(k).map(_.as(k)).getOrElse(col(k))): _*)
-        scan.select(dataCols.map(col): _*).schema.fields
-          .zip(updated.schema.fields).foreach {
-            case (o, n) => require(o.dataType == n.dataType,
-              s"updateDv: set expression for ${o.name} has type " +
-                s"${n.dataType.simpleString}, column is " +
-                s"${o.dataType.simpleString} — cast the expression " +
-                "explicitly (the manifest schema is not changed by update)")
+    maintainDvIfHeavy(spark, table, maxPendingDvBytes, statsCols,
+      strStatsCols, bloomStatsCols)
+    val landed = commitOn(table, txnId) { (base, version) =>
+      val kept =
+        if (base.files.isEmpty) Nil else dvPrune(spark, table, base, cond)
+      // no file can hold a match: nothing to commit
+      if (kept.isEmpty) None
+      else {
+        val scan = morScan(spark, table, base, kept, pos = true)
+        val dataCols = scan.columns.toSeq
+          .filterNot(c => c == GraftFileCol || c == GraftPosCol)
+        set.keys.foreach(k => require(dataCols.contains(k),
+          s"updateDv: set column $k not in $table's schema"))
+        val matched = scan.where(cond).cache()
+        try {
+          val cnt = matched.count()
+          if (cnt == 0) None
+          else {
+            require(cnt <= maxPositions,
+              s"updateDv on $table: $cnt matched rows exceed maxPositions " +
+                s"($maxPositions) — use updateWhere (copy-on-write) or " +
+                "updateMor (key sidecar) for bulk updates, or raise the bound")
+            // new images: ONE projection off the matched scan — every set
+            // RHS reads the pre-update row (the updateWhere contract)
+            val updated = matched.select(dataCols.map(k =>
+              set.get(k).map(_.as(k)).getOrElse(col(k))): _*)
+            scan.select(dataCols.map(col): _*).schema.fields
+              .zip(updated.schema.fields).foreach {
+                case (o, n) => require(o.dataType == n.dataType,
+                  s"updateDv: set expression for ${o.name} has type " +
+                    s"${n.dataType.simpleString}, column is " +
+                    s"${o.dataType.simpleString} — cast the expression " +
+                    "explicitly (the manifest schema is not changed by update)")
+              }
+            enforceChecks(spark, table, base.checks, updated, "updateDv")
+            val (newFiles, newRows) = writeDataFiles(spark, table, updated,
+              statsCols, strStatsCols, bloomStatsCols)
+            require(newRows == cnt,
+              s"updateDv audit failed for $table: wrote $newRows new " +
+                s"images for $cnt matched rows — not committing")
+            val (delFiles, _) = writeDataFiles(spark, table,
+              matched.select(col(GraftFileCol).as(DvFileField),
+                col(GraftPosCol).as(DvPosField)).coalesce(1),
+              Seq(DvPosField), Seq(DvFileField), Nil)
+            Some(Change("update_dv", base.rows, base.schemaJson, base.counters,
+              adds = newFiles, delAdds = delFiles.map(f =>
+                DeleteEntry(f.copy(ver = version), DvKeyCol, version))))
           }
-        enforceChecks(spark, table, base.checks, updated, "updateDv")
-        val (newFiles, newRows) = writeDataFiles(spark, table, updated,
-          statsCols, strStatsCols, bloomStatsCols)
-        require(newRows == cnt,
-          s"updateDv audit failed for $table: wrote $newRows new " +
-            s"images for $cnt matched rows — not committing")
-        val (delFiles, _) = writeDataFiles(spark, table,
-          matched.select(col(GraftFileCol).as(DvFileField),
-            col(GraftPosCol).as(DvPosField)).coalesce(1),
-          Seq(DvPosField), Seq(DvFileField), Nil)
-        val version = base.version + 1
-        val stamped = newFiles.map(_.copy(ver = version))
-        val newDels = delFiles.map(f =>
-          DeleteEntry(f.copy(ver = version), DvKeyCol, version))
-        val r =
-          if (version % checkpointInterval == 0)
-            ManifestRec(version, base.version, "update_dv", base.rows,
-              "full", base.files ++ stamped, Nil, Nil,
-              base.dels ++ newDels, Nil, txnId, base.schemaJson,
-              base.counters)
-          else
-            ManifestRec(version, base.version, "update_dv", base.rows,
-              "delta", Nil, stamped, Nil, Nil, newDels, txnId,
-              base.schemaJson, base.counters)
-        if (tryCommit(table, r)) committed = version
-      } finally { matched.unpersist(); () }
+        } finally { matched.unpersist(); () }
+      }
     }
     // typed-feed capture: old images as deletes + new images as inserts
-    if (feedEnabled(table)) publishFeed(spark, table)
-    committed
+    if (landed.fresh && feedEnabled(table)) publishFeed(spark, table)
+    landed.version
   }
 
   /** Commit half of Spark's GROUP-BASED row-level framework
@@ -5609,9 +5456,7 @@ object TableLog {
           }
         raw - vectored
       }
-    var committed = -1L
-    while (committed < 0) {
-      val base = snapshotOrFail(table)
+    val committed = commitOn(table) { (base, _) =>
       val live = base.files.map(_.path).toSet
       removedPaths.foreach(p => require(live(p),
         s"row-level $action on $table: file $p was rewritten by a " +
@@ -5633,32 +5478,17 @@ object TableLog {
         s"row-level $action on $table: pending KEY merge-on-read " +
           "sidecars — the scanned groups are stale; retry the " +
           "statement")
-      val version = base.version + 1
-      val stamped = entries.map(_.copy(ver = version))
-      val rows = base.rows - removedRows + newRows
-      val rm = removedPaths.toSet
-      val survivors = base.files.filterNot(f => rm(f.path)) ++ stamped
       // same orphan rule as metadataDelete: a sidecar whose every
       // fenced file was just replaced (its keys/positions applied in
-      // the rewrite) must not be carried forever — prune it, forcing a
-      // FULL manifest when anything pruned (deltas can't remove dels).
-      // The stamped new files are in `survivors` deliberately: a new
-      // basename that lexically falls inside a vector's file-key range
-      // keeps it (conservative — exact membership resolves at scan
-      // time through the loaded vector, a map miss keeps the row).
-      val liveDels = liveDelsAfter(base, survivors)
-      val r =
-        if (version % checkpointInterval == 0 ||
-            liveDels.size < base.dels.size)
-          ManifestRec(version, base.version, action, rows, "full",
-            survivors, Nil, Nil,
-            liveDels, Nil, None, base.schemaJson, base.counters)
-        else
-          ManifestRec(version, base.version, action, rows, "delta",
-            Nil, stamped, removedPaths, Nil, Nil, None, base.schemaJson,
-            base.counters)
-      if (tryCommit(table, r)) committed = version
-    }
+      // the rewrite) must not be carried forever — prune it. The
+      // stamped new files survive deliberately: a new basename that
+      // lexically falls inside a vector's file-key range keeps it
+      // (conservative — exact membership resolves at scan time through
+      // the loaded vector, a map miss keeps the row).
+      Some(Change(action, base.rows - removedRows + newRows,
+        base.schemaJson, base.counters, adds = entries,
+        removes = removedPaths, pruneDels = true))
+    }.version
     if (feedEnabled(table)) publishFeed(spark, table)
     committed
   }
@@ -5795,47 +5625,33 @@ object TableLog {
       s"metadata delete on feed-enabled table $table: the append-only " +
         s"change feed cannot represent a delete — enableCdcFeed" +
         s"($table), or remove ${feedDir(table)} to disable the feed")
-    var committed = -1L
-    while (committed < 0) {
-      val base = snapshotOrFail(table)
+    val landed = commitOn(table) { (base, _) =>
       val drop = mdDeletePlan(base, p).getOrElse(sys.error(
         s"metadata-only DELETE on $table: exact file coverage is no " +
           "longer provable (a concurrent commit, a legacy entry " +
           "without row counts, or a pending key sidecar) — retry the " +
           "statement, or compact() to refresh the manifest metadata"))
-      if (drop.isEmpty) return base.version
-      val dvs = base.dels.filter(_.keyCol == DvKeyCol)
-      val removedLive =
-        if (dvs.isEmpty) drop.map(_.rows).sum
-        else {
-          val dv = loadDv(spark, table, dvs)
-          drop.map(f => f.rows - dv.positionsFor(lastTwo(f.path))).sum
-        }
-      val rmPaths = drop.map(_.path)
-      val version = base.version + 1
-      val rows = base.rows - removedLive
-      val rm = rmPaths.toSet
-      val survivors = base.files.filterNot(f => rm(f.path))
-      // prune deletion vectors orphaned by the drop (liveDelsAfter;
-      // forcing a FULL manifest when anything pruned — rare: only when
-      // a DV's whole fenced range fell inside the dropped files).
-      // mdDeletePlan refused KEY sidecars, so every entry is a DV.
-      val liveDels = liveDelsAfter(base, survivors)
-      val r =
-        if (version % checkpointInterval == 0 ||
-            liveDels.size < base.dels.size)
-          ManifestRec(version, base.version, "delete", rows, "full",
-            survivors, Nil, Nil, liveDels,
-            Nil, None, base.schemaJson, base.counters)
-        else
-          ManifestRec(version, base.version, "delete", rows, "delta",
-            Nil, Nil, rmPaths, Nil, Nil, None, base.schemaJson,
-            base.counters)
-      if (tryCommit(table, r)) { committed = version
-        metadataDeletes.incrementAndGet(); () }
+      // no file is wholly covered: nothing to commit
+      Option.when(drop.nonEmpty) {
+        val dvs = base.dels.filter(_.keyCol == DvKeyCol)
+        val removedLive =
+          if (dvs.isEmpty) drop.map(_.rows).sum
+          else {
+            val dv = loadDv(spark, table, dvs)
+            drop.map(f => f.rows - dv.positionsFor(lastTwo(f.path))).sum
+          }
+        // prune deletion vectors orphaned by the drop (rare: only when a
+        // DV's whole fenced range fell inside the dropped files).
+        // mdDeletePlan refused KEY sidecars, so every entry is a DV.
+        Change("delete", base.rows - removedLive, base.schemaJson,
+          base.counters, removes = drop.map(_.path), pruneDels = true)
+      }
     }
-    if (feedEnabled(table)) publishFeed(spark, table)
-    committed
+    if (landed.fresh) {
+      metadataDeletes.incrementAndGet()
+      if (feedEnabled(table)) publishFeed(spark, table)
+    }
+    landed.version
   }
 
   /** The delta-based row-level commit (`SupportsDelta` /
@@ -5907,50 +5723,36 @@ object TableLog {
         }
         fs
       } else dvEntries
-    var committed = -1L
-    try {
-    while (committed < 0) {
-      val base = snapshotOrFail(table)
-      val live = base.files.map(_.path).toSet
-      scannedPaths.foreach(p => require(live(p),
-        s"row-level $action on $table: file $p was rewritten by a " +
-          "concurrent commit after the scan planned — its positions " +
-          "no longer address the live rows; retry the statement"))
-      val scannedEntries = base.files.filter(f =>
-        scannedPaths.contains(f.path))
-      base.dels.filter(_.ver > planVersion).foreach(d =>
-        scannedEntries.foreach(f => require(!sidecarFences(base, f, d),
-          s"row-level $action on $table: a merge-on-read sidecar " +
-            s"committed at version ${d.ver} (after the scan planned " +
-            s"at $planVersion) fences scanned file ${f.path} — the " +
-            "matched set may overlap its deletes; retry the statement")))
-      val version = base.version + 1
-      val stamped = entries.map(_.copy(ver = version))
-      val newDels = dvCommit.map(f =>
-        DeleteEntry(f.copy(ver = version), DvKeyCol, version))
-      val rows = base.rows - deleted + newRows
-      val r =
-        if (version % checkpointInterval == 0)
-          ManifestRec(version, base.version, action, rows, "full",
-            base.files ++ stamped, Nil, Nil, base.dels ++ newDels, Nil,
-            None, base.schemaJson, base.counters)
-        else
-          ManifestRec(version, base.version, action, rows, "delta",
-            Nil, stamped, Nil, Nil, newDels, None, base.schemaJson,
-            base.counters)
-      if (tryCommit(table, r)) committed = version
-    }
-    } catch { case e: Throwable =>
-      // a failed commit aborts the statement; Spark's abort() deletes
-      // the ORIGINAL staged shards by message path — the folded
-      // sidecar is ours to clean
-      if (dvCommit ne dvEntries) dvCommit.foreach { f =>
-        val p = Paths.get(table, f.path)
-        Files.deleteIfExists(p)
-        Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
+    val committed =
+      try commitOn(table) { (base, version) =>
+        val live = base.files.map(_.path).toSet
+        scannedPaths.foreach(p => require(live(p),
+          s"row-level $action on $table: file $p was rewritten by a " +
+            "concurrent commit after the scan planned — its positions " +
+            "no longer address the live rows; retry the statement"))
+        val scannedEntries = base.files.filter(f =>
+          scannedPaths.contains(f.path))
+        base.dels.filter(_.ver > planVersion).foreach(d =>
+          scannedEntries.foreach(f => require(!sidecarFences(base, f, d),
+            s"row-level $action on $table: a merge-on-read sidecar " +
+              s"committed at version ${d.ver} (after the scan planned " +
+              s"at $planVersion) fences scanned file ${f.path} — the " +
+              "matched set may overlap its deletes; retry the statement")))
+        Some(Change(action, base.rows - deleted + newRows, base.schemaJson,
+          base.counters, adds = entries, delAdds = dvCommit.map(f =>
+            DeleteEntry(f.copy(ver = version), DvKeyCol, version))))
+      }.version
+      catch { case e: Throwable =>
+        // a failed commit aborts the statement; Spark's abort() deletes
+        // the ORIGINAL staged shards by message path — the folded
+        // sidecar is ours to clean
+        if (dvCommit ne dvEntries) dvCommit.foreach { f =>
+          val p = Paths.get(table, f.path)
+          Files.deleteIfExists(p)
+          Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
+        }
+        throw e
       }
-      throw e
-    }
     if (feedEnabled(table)) publishFeed(spark, table)
     // aggregate-weight guard, POST-commit: a pre-scan materialization
     // is impossible here (the operation's positions address the
@@ -6070,89 +5872,79 @@ object TableLog {
         s"${feedDir(table)} to disable the feed")
     txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
     val cond = coalesce(col(c).cast("long").between(lo, hi), lit(false))
-    var committed = -1L
-    while (committed < 0) {
-      val base = snapshotOrFail(table)
-      txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
+    val landed = commitOn(table, txnId) { (base, version) =>
       val affected = prunedFilesOf(base, c, lo, hi)
-      if (affected.isEmpty) return base.version
-      val scan = morScan(spark, table, base, affected)
-      set.keys.foreach(k => require(scan.columns.contains(k),
-        s"updateMor: set column $k not in $table's schema"))
-      require(scan.columns.contains(keyCol),
-        s"updateMor: key column $keyCol not in $table's schema")
-      val matched = scan.where(cond).cache()
-      try {
-        val mst = matched.agg(
-          org.apache.spark.sql.functions.count(lit(1)),
-          org.apache.spark.sql.functions.count(col(keyCol))).head()
-        val matchedRows = mst.getLong(0)
-        if (matchedRows == 0) return base.version
-        // a NULL key is unaddressable by the sidecar anti-join: its
-        // old image would never vanish while its new image appears
-        require(mst.getLong(1) == matchedRows,
-          s"updateMor on $table: ${matchedRows - mst.getLong(1)} " +
-            s"matched row(s) have a NULL $keyCol — a MOR update " +
-            "cannot address them; use updateWhere")
-        val isString = scan.schema(keyCol).dataType ==
-          org.apache.spark.sql.types.StringType
-        val keyDf = matched.select(col(keyCol)).distinct()
-        // COVERAGE audit: the sidecar deletes EVERY row carrying a
-        // matched key from every fenced file — if any key-sharing row
-        // does NOT match the predicate, committing would silently
-        // lose it. One key-column-only scan over the key-pruned
-        // candidates, same cost class as deleteMor's audit.
-        val candidates = keyPruneOf(spark, keyDf, keyCol, isString)(base)
-        val withKeys = morScan(spark, table, base, candidates)
-          .select(col(keyCol))
-          .join(keyDf, Seq(keyCol), "left_semi").count()
-        require(withKeys == matchedRows,
-          s"updateMor on $table: ${withKeys - matchedRows} row(s) " +
-            s"share a matched $keyCol but do not match the predicate " +
-            "— a MOR update would lose them; widen the predicate or " +
-            "use updateWhere")
-        // new images: ONE projection off the matched scan — every set
-        // RHS reads the pre-update row (the updateWhere contract)
-        val updated = matched.select(scan.columns.map(k =>
-          set.get(k).map(_.as(k)).getOrElse(col(k))): _*)
-        scan.schema.fields.zip(updated.schema.fields).foreach {
-          case (o, n) => require(o.dataType == n.dataType,
-            s"updateMor: set expression for ${o.name} has type " +
-              s"${n.dataType.simpleString}, column is " +
-              s"${o.dataType.simpleString} — cast the expression " +
-              "explicitly (the manifest schema is not changed by update)")
-        }
-        enforceChecks(spark, table, base.checks, updated, "updateMor")
-        val (newFiles, newRows) = writeDataFiles(spark, table, updated,
-          statsCols, strStatsCols, bloomStatsCols)
-        require(newRows == matchedRows,
-          s"updateMor audit failed for $table: wrote $newRows new " +
-            s"images for $matchedRows matched rows — not committing")
-        val (delFiles, _) = writeDataFiles(spark, table, keyDf,
-          if (isString) Nil else Seq(keyCol),
-          if (isString) Seq(keyCol) else Nil, Nil)
-        val version = base.version + 1
-        val stamped = newFiles.map(_.copy(ver = version))
-        val newDels = delFiles.map(f =>
-          DeleteEntry(f.copy(ver = version), keyCol, version))
-        val r =
-          if (version % checkpointInterval == 0)
-            ManifestRec(version, base.version, "update_mor", base.rows,
-              "full", base.files ++ stamped, Nil, Nil,
-              base.dels ++ newDels, Nil, txnId, base.schemaJson,
-              base.counters)
-          else
-            ManifestRec(version, base.version, "update_mor", base.rows,
-              "delta", Nil, stamped, Nil, Nil, newDels, txnId,
-              base.schemaJson, base.counters)
-        if (tryCommit(table, r)) committed = version
-        // CAS loss: re-read the base and redo; orphaned files are
-        // invisible garbage until vacuum
-      } finally { matched.unpersist(); () }
+      // no file can hold a match: nothing to commit
+      if (affected.isEmpty) None
+      else {
+        val scan = morScan(spark, table, base, affected)
+        set.keys.foreach(k => require(scan.columns.contains(k),
+          s"updateMor: set column $k not in $table's schema"))
+        require(scan.columns.contains(keyCol),
+          s"updateMor: key column $keyCol not in $table's schema")
+        val matched = scan.where(cond).cache()
+        try {
+          val mst = matched.agg(
+            org.apache.spark.sql.functions.count(lit(1)),
+            org.apache.spark.sql.functions.count(col(keyCol))).head()
+          val matchedRows = mst.getLong(0)
+          if (matchedRows == 0) None
+          else {
+            // a NULL key is unaddressable by the sidecar anti-join: its
+            // old image would never vanish while its new image appears
+            require(mst.getLong(1) == matchedRows,
+              s"updateMor on $table: ${matchedRows - mst.getLong(1)} " +
+                s"matched row(s) have a NULL $keyCol — a MOR update " +
+                "cannot address them; use updateWhere")
+            val isString = scan.schema(keyCol).dataType ==
+              org.apache.spark.sql.types.StringType
+            val keyDf = matched.select(col(keyCol)).distinct()
+            // COVERAGE audit: the sidecar deletes EVERY row carrying a
+            // matched key from every fenced file — if any key-sharing row
+            // does NOT match the predicate, committing would silently
+            // lose it. One key-column-only scan over the key-pruned
+            // candidates, same cost class as deleteMor's audit.
+            val candidates = keyPruneOf(spark, keyDf, keyCol, isString)(base)
+            val withKeys = morScan(spark, table, base, candidates)
+              .select(col(keyCol))
+              .join(keyDf, Seq(keyCol), "left_semi").count()
+            require(withKeys == matchedRows,
+              s"updateMor on $table: ${withKeys - matchedRows} row(s) " +
+                s"share a matched $keyCol but do not match the predicate " +
+                "— a MOR update would lose them; widen the predicate or " +
+                "use updateWhere")
+            // new images: ONE projection off the matched scan — every set
+            // RHS reads the pre-update row (the updateWhere contract)
+            val updated = matched.select(scan.columns.map(k =>
+              set.get(k).map(_.as(k)).getOrElse(col(k))): _*)
+            scan.schema.fields.zip(updated.schema.fields).foreach {
+              case (o, n) => require(o.dataType == n.dataType,
+                s"updateMor: set expression for ${o.name} has type " +
+                  s"${n.dataType.simpleString}, column is " +
+                  s"${o.dataType.simpleString} — cast the expression " +
+                  "explicitly (the manifest schema is not changed by update)")
+            }
+            enforceChecks(spark, table, base.checks, updated, "updateMor")
+            val (newFiles, newRows) = writeDataFiles(spark, table, updated,
+              statsCols, strStatsCols, bloomStatsCols)
+            require(newRows == matchedRows,
+              s"updateMor audit failed for $table: wrote $newRows new " +
+                s"images for $matchedRows matched rows — not committing")
+            val (delFiles, _) = writeDataFiles(spark, table, keyDf,
+              if (isString) Nil else Seq(keyCol),
+              if (isString) Seq(keyCol) else Nil, Nil)
+            // CAS loss: re-read the base and redo; orphaned files are
+            // invisible garbage until vacuum
+            Some(Change("update_mor", base.rows, base.schemaJson,
+              base.counters, adds = newFiles, delAdds = delFiles.map(f =>
+                DeleteEntry(f.copy(ver = version), keyCol, version))))
+          }
+        } finally { matched.unpersist(); () }
+      }
     }
     // typed-feed capture: old images as deletes + new images as inserts
-    if (feedEnabled(table)) publishFeed(spark, table)
-    committed
+    if (landed.fresh && feedEnabled(table)) publishFeed(spark, table)
+    landed.version
   }
 
   /** MERGE-ON-READ upsert — `mergeCow` semantics (latest-wins on
@@ -6225,10 +6017,7 @@ object TableLog {
       if (isString) Nil else Seq(keyCol),
       if (isString) Seq(keyCol) else Nil, Nil)
     val affectedOf = keyPruneOf(spark, keys, keyCol, isString)
-    var committed = -1L
-    while (committed < 0) {
-      val base = snapshotOrFail(table)
-      txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
+    val landed = commitOn(table, txnId) { (base, version) =>
       enforceChecks(spark, table, base.checks, ins, what)
       val candidates = affectedOf(base)
       val matched =
@@ -6236,25 +6025,12 @@ object TableLog {
         else morScan(spark, table, base, candidates)
           .select(col(keyCol))
           .join(keys, Seq(keyCol), "left_semi").count()
-      val version = base.version + 1
-      val stamped = newFiles.map(_.copy(ver = version))
-      val newDels = delFiles.map(f =>
-        DeleteEntry(f.copy(ver = version), keyCol, version))
-      val rows = base.rows - matched + insRows
-      val r =
-        if (version % checkpointInterval == 0)
-          ManifestRec(version, base.version, action, rows,
-            "full", base.files ++ stamped, Nil, Nil,
-            base.dels ++ newDels, Nil, txnId, base.schemaJson,
-            base.counters)
-        else
-          ManifestRec(version, base.version, action, rows,
-            "delta", Nil, stamped, Nil, Nil, newDels, txnId,
-            base.schemaJson, base.counters)
-      if (tryCommit(table, r)) committed = version
+      Some(Change(action, base.rows - matched + insRows, base.schemaJson,
+        base.counters, adds = newFiles, delAdds = delFiles.map(f =>
+          DeleteEntry(f.copy(ver = version), keyCol, version))))
     }
-    if (feedEnabled(table)) publishFeed(spark, table)
-    committed
+    if (landed.fresh && feedEnabled(table)) publishFeed(spark, table)
+    landed.version
   }
 
   /** Stats-pruned COPY-ON-WRITE update: for every row where `c` (cast
@@ -6291,63 +6067,49 @@ object TableLog {
         s"${feedDir(table)} to disable the feed")
     txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
     val cond = coalesce(col(c).cast("long").between(lo, hi), lit(false))
-    var committed = -1L
-    while (committed < 0) {
-      val base = snapshotOrFail(table)
-      txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
+    val landed = commitOn(table, txnId) { (base, _) =>
       val affected = prunedFilesOf(base, c, lo, hi)
-      if (affected.isEmpty) return base.version
-      val affectedPaths = affected.map(_.path)
-      val scan = morScan(spark, table, base, affected)
-      set.keys.foreach(k => require(scan.columns.contains(k),
-        s"updateWhere: set column $k not in $table's schema"))
-      val scanRows = liveRowsOf(spark, table, base, affected)
-      // ONE projection off the unmodified scan: every set RHS reads the
-      // pre-update row (a foldLeft of withColumn would feed each later
-      // expression the PREVIOUS expression's output — the a/b swap
-      // bug, Map-iteration-order nondeterministic past 4 entries)
-      val updated = scan.select(scan.columns.map(k =>
-        set.get(k).map(e => when(cond, e).otherwise(col(k)))
-          .getOrElse(col(k)).as(k)): _*)
-      // schema audit: when/otherwise type coercion can silently widen
-      // a column (long + lit(0.5) → double) — the data files would
-      // then disagree with the manifest's unchanged schemaJson and
-      // fail only at a LATER read. Refuse before writing, not cast:
-      // an implicit cast back (0.5 as long = 0) corrupts silently.
-      scan.schema.fields.zip(updated.schema.fields).foreach {
-        case (o, n) => require(o.dataType == n.dataType,
-          s"updateWhere: set expression for ${o.name} has type " +
-            s"${n.dataType.simpleString}, column is " +
-            s"${o.dataType.simpleString} — cast the expression " +
-            "explicitly (the manifest schema is not changed by update)")
+      // no file can hold a match: nothing to commit
+      Option.when(affected.nonEmpty) {
+        val scan = morScan(spark, table, base, affected)
+        set.keys.foreach(k => require(scan.columns.contains(k),
+          s"updateWhere: set column $k not in $table's schema"))
+        val scanRows = liveRowsOf(spark, table, base, affected)
+        // ONE projection off the unmodified scan: every set RHS reads the
+        // pre-update row (a foldLeft of withColumn would feed each later
+        // expression the PREVIOUS expression's output — the a/b swap
+        // bug, Map-iteration-order nondeterministic past 4 entries)
+        val updated = scan.select(scan.columns.map(k =>
+          set.get(k).map(e => when(cond, e).otherwise(col(k)))
+            .getOrElse(col(k)).as(k)): _*)
+        // schema audit: when/otherwise type coercion can silently widen
+        // a column (long + lit(0.5) → double) — the data files would
+        // then disagree with the manifest's unchanged schemaJson and
+        // fail only at a LATER read. Refuse before writing, not cast:
+        // an implicit cast back (0.5 as long = 0) corrupts silently.
+        scan.schema.fields.zip(updated.schema.fields).foreach {
+          case (o, n) => require(o.dataType == n.dataType,
+            s"updateWhere: set expression for ${o.name} has type " +
+              s"${n.dataType.simpleString}, column is " +
+              s"${o.dataType.simpleString} — cast the expression " +
+              "explicitly (the manifest schema is not changed by update)")
+        }
+        // only the rows the update actually touches need re-validation —
+        // untouched rows were validated when they were written
+        enforceChecks(spark, table, base.checks, updated.where(cond),
+          "updateWhere")
+        val (newFiles, newRows) = writeDataFiles(spark, table, updated,
+          statsCols, strStatsCols, bloomStatsCols)
+        require(newRows == scanRows,
+          s"update audit failed for $table: rewrite produced $newRows " +
+            s"rows from $scanRows — not committing")
+        Change("update", base.rows, base.schemaJson, base.counters,
+          adds = newFiles, removes = affected.map(_.path))
       }
-      // only the rows the update actually touches need re-validation —
-      // untouched rows were validated when they were written
-      enforceChecks(spark, table, base.checks, updated.where(cond),
-        "updateWhere")
-      val (newFiles, newRows) = writeDataFiles(spark, table, updated,
-        statsCols, strStatsCols, bloomStatsCols)
-      require(newRows == scanRows,
-        s"update audit failed for $table: rewrite produced $newRows " +
-          s"rows from $scanRows — not committing")
-      val version = base.version + 1
-      val stamped = newFiles.map(_.copy(ver = version))
-      // mirror delete's checkpoint cadence so delta chains stay bounded
-      val r =
-        if (version % checkpointInterval == 0) {
-          val rm = affectedPaths.toSet
-          ManifestRec(version, base.version, "update", base.rows, "full",
-            base.files.filterNot(f => rm(f.path)) ++ stamped, Nil, Nil,
-            base.dels, Nil, txnId, base.schemaJson, base.counters)
-        } else
-          ManifestRec(version, base.version, "update", base.rows, "delta",
-            Nil, stamped, affectedPaths, Nil, Nil, txnId, base.schemaJson,
-            base.counters)
-      if (tryCommit(table, r)) committed = version
     }
     // typed-feed capture of the update's old/new images
-    if (feedEnabled(table)) publishFeed(spark, table)
-    committed
+    if (landed.fresh && feedEnabled(table)) publishFeed(spark, table)
+    landed.version
   }
 
   /** Latest-wins upsert through the log: snapshot rows whose key
@@ -6762,7 +6524,7 @@ object TableLog {
     }
   }
 
-  /** The shared COW-upsert CAS loop behind `cowApply`/`cowApplyStr`:
+  /** The shared COW-upsert commit behind `cowApply`/`cowApplyStr`:
     * key-type-specific pruning comes in as `affectedOf`, everything
     * else (scan, semi/anti join, audit, delta manifest, CAS retry,
     * feed capture) is identical. */
@@ -6771,15 +6533,11 @@ object TableLog {
       keyCol: String, affectedOf: Snapshot => Seq[FileEntry],
       statsCols: Seq[String], strStatsCols: Seq[String],
       txnId: Option[String], bloomStatsCols: Seq[String]): Long = {
-    var committed = -1L
-    while (committed < 0) {
-      val base = snapshotOrFail(table)
-      txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
+    val landed = commitOn(table, txnId) { (base, _) =>
       // `inserts` is the complete source relation (updates + new
       // keys); the carried remainder was validated when written
       enforceChecks(spark, table, base.checks, inserts, "merge")
       val affected = affectedOf(base)
-      val affectedPaths = affected.map(_.path)
       val (newFiles, newRows, matched, scanRows) =
         if (affected.isEmpty) {
           // every file's stats exclude every touched key: pure insert
@@ -6800,27 +6558,14 @@ object TableLog {
         s"merge audit failed for $table: rewrite produced $newRows " +
           s"rows from $scanRows affected − $matched matched + $insRows " +
           "inserts — not committing")
-      val rows = base.rows - matched + insRows
-      val version = base.version + 1
-      val stamped = newFiles.map(_.copy(ver = version))
-      // mirror delete's checkpoint cadence so delta chains stay bounded
-      val r =
-        if (version % checkpointInterval == 0) {
-          val rm = affectedPaths.toSet
-          ManifestRec(version, base.version, "merge", rows, "full",
-            base.files.filterNot(f => rm(f.path)) ++ stamped, Nil, Nil,
-            base.dels, Nil, txnId, base.schemaJson, base.counters)
-        } else
-          ManifestRec(version, base.version, "merge", rows, "delta",
-            Nil, stamped, affectedPaths, Nil, Nil, txnId, base.schemaJson,
-            base.counters)
-      if (tryCommit(table, r)) committed = version
+      Some(Change("merge", base.rows - matched + insRows, base.schemaJson,
+        base.counters, adds = newFiles, removes = affected.map(_.path)))
     }
     // typed-feed capture of the upsert's delete/insert halves (CDC
     // tables only — the guard upstream refused plain feeds); a crash
     // before the done-marker is healed by the next publish
-    if (feedEnabled(table)) publishFeed(spark, table)
-    committed
+    if (landed.fresh && feedEnabled(table)) publishFeed(spark, table)
+    landed.version
   }
 
   /** Reclaim invisible garbage: data files referenced by NO manifest
@@ -6839,7 +6584,7 @@ object TableLog {
     * concurrently — with the guard off, a racing writer's pre-commit
     * data files are fair game again (the writer or its readers then
     * fail loudly on the missing files; a vanished TEMP manifest alone
-    * degrades to a clean CAS retry in tryCommit). */
+    * degrades to a clean CAS retry in `commit`). */
   def vacuum(spark: SparkSession, table: String,
       keepVersions: Int = Int.MaxValue,
       olderThanMs: Long = StagedCommit.staleLeaseDefaultMs,

@@ -3571,4 +3571,223 @@ class TableLogSpec extends SparkSpec {
       assert(TableLog.read(spark, t3).count() == 4000 - 101)
     } finally spark.conf.unset("spark.graft.mutation.auditScan")
   }
+
+  // ── every commit face, scripted on one table ──────────────────────
+  import TableLogSpec.Face
+
+  private def rowsOf(ids: Seq[Long], v: Long => Long = identity) =
+    ids.map(i => (i, v(i))).toDF("id", "v").coalesce(1)
+
+  /** The write faces, each with its own guards and Spark work ahead of
+    * the shared commit, in an order that drives one (id, v) table past
+    * v20 with checkpoints landing on rewrites, on delete-pruning
+    * commits, and on the cadence. Metadata-only faces sit off the
+    * multiples of 10. `restore` returns to the version `compactSmall`
+    * committed. */
+  private def faceScript(t: String): Seq[Face] = {
+    val st = Seq("id")
+    var mark = 0L
+    var marked = Map.empty[Long, Long]
+    def drop(lo: Long, hi: Long)(m: Map[Long, Long]) =
+      m.filterNot { case (i, _) => i >= lo && i <= hi }
+    Seq(
+      Face("create", () => TableLog.create(spark, t,
+        rowsOf(0L until 100L).repartition(2), statsCols = st),
+        _ => (0L until 100L).map(i => i -> i).toMap, full = true),
+      Face("append", () => TableLog.append(spark, t,
+        rowsOf(100L until 120L), statsCols = st),
+        _ ++ (100L until 120L).map(i => i -> i)),
+      Face("mergeCow", () => TableLog.mergeCow(spark, t,
+        rowsOf(110L until 130L, -_), "id", statsCols = st),
+        _ ++ (110L until 130L).map(i => i -> -i)),
+      Face("deleteDv", () => TableLog.deleteDv(spark, t,
+        $"id".between(0, 4), statsCols = st), drop(0, 4)),
+      Face("updateDv", () => TableLog.updateDv(spark, t,
+        $"id".between(10, 14), Map("v" -> ($"v" + 1000L)),
+        statsCols = st),
+        m => m.map { case (i, v) =>
+          i -> (if (i >= 10 && i <= 14) v + 1000 else v) }),
+      Face("deleteMor", () => TableLog.deleteMor(spark, t, "id",
+        spark.range(20L, 25L).toDF("id")), drop(20, 24)),
+      Face("addColumn", () => TableLog.addColumn(spark, t, "extra",
+        org.apache.spark.sql.types.LongType), identity),
+      Face("addCheckConstraint", () => TableLog.addCheckConstraint(
+        spark, t, "pos", "id >= 0"), identity),
+      Face("dropCheckConstraint", () =>
+        TableLog.dropCheckConstraint(t, "pos"), identity),
+      Face("mergeUpsert", () => TableLog.mergeUpsert(spark, t,
+        rowsOf(120L until 140L, _ => 7L)
+          .withColumn("extra", lit(null).cast("long")), Seq("id")),
+        _ ++ (120L until 140L).map(_ -> 7L), full = true),
+      Face("zOrder", () => TableLog.zOrder(spark, t, 2, "id",
+        (0L, 1000L), "v", (-1000L, 2000L), statsCols = st),
+        identity, full = true),
+      Face("append", () => TableLog.append(spark, t,
+        rowsOf(300L until 310L), statsCols = st),
+        _ ++ (300L until 310L).map(i => i -> i)),
+      Face("append", () => TableLog.append(spark, t,
+        rowsOf(310L until 320L), statsCols = st),
+        _ ++ (310L until 320L).map(i => i -> i)),
+      Face("zOrderMaintain", () => TableLog.zOrderMaintain(spark, t,
+        targetBytes = 1L << 30, statsCols = st), identity),
+      Face("deleteDv", () => TableLog.deleteDv(spark, t,
+        $"id".between(300, 301), statsCols = st), drop(300, 301)),
+      // rewrites the one clustered file the vector targets: prunes it
+      Face("replaceWhere", () => TableLog.replaceWhere(spark, t,
+        $"id".between(300, 319), rowsOf(300L until 305L, _ => 1L),
+        statsCols = st, prune = TableLog.prunedFilesOf(_, "id", 300, 319)),
+        m => drop(300, 319)(m) ++ (300L until 305L).map(_ -> 1L),
+        full = true),
+      Face("append", () => TableLog.append(spark, t,
+        rowsOf(Seq(400L, 401L)), statsCols = st),
+        _ ++ Seq(400L -> 400L, 401L -> 401L)),
+      Face("append", () => TableLog.append(spark, t,
+        rowsOf(Seq(402L, 403L)), statsCols = st),
+        _ ++ Seq(402L -> 402L, 403L -> 403L)),
+      Face("deleteDv", () => TableLog.deleteDv(spark, t,
+        $"id" === 400L, statsCols = st), drop(400, 400)),
+      Face("append", () => TableLog.append(spark, t,
+        rowsOf(Seq(500L, 501L)), statsCols = st),
+        _ ++ Seq(500L -> 500L, 501L -> 501L)),
+      // packs every unclustered file, the vector's target among them
+      Face("compactSmall", () => {
+        TableLog.compactSmall(spark, t, smallBytes = 1L << 30,
+          statsCols = st)
+        mark = TableLog.latestVersion(t)
+      }, m => { marked = m; m }, full = true),
+      Face("deleteMor", () => TableLog.deleteMor(spark, t, "id",
+        spark.range(500L, 501L).toDF("id")), drop(500, 500)),
+      Face("restore", () => TableLog.restore(spark, t, mark),
+        _ => marked, full = true),
+      Face("commitStaged replace", () => {
+        val df = rowsOf(700L until 710L)
+        val (files, n) = TableLog.stageDataFiles(spark, t, df, st)
+        TableLog.commitStaged(t, files, n, df.schema.json, replace = true)
+      }, _ => (700L until 710L).map(i => i -> i).toMap, full = true),
+      Face("append", () => TableLog.append(spark, t,
+        rowsOf(800L until 805L), statsCols = st),
+        _ ++ (800L until 805L).map(i => i -> i)))
+  }
+
+  private def manifestKind(t: String, v: Long): String = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get(t, "_log", f"v$v%08d.manifest")).asScala
+      .collectFirst { case l if l.startsWith("kind=") => l.drop(5) }.get
+  }
+
+  private def contentOf(t: String): Seq[(Long, Long)] =
+    TableLog.read(spark, t).select("id", "v").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
+
+  test("checkpoint cadence: every face writes a full manifest exactly at " +
+      "v1, every checkpointInterval-th version, whole-list replacements " +
+      "and delete-pruning commits") {
+    val t = tmp("graft_log_cadence")
+    var model = Map.empty[Long, Long]
+    val expect = scala.collection.mutable.ArrayBuffer.empty[(String,
+      Boolean, Map[Long, Long])]
+    faceScript(t).foreach { f =>
+      f.run()
+      model = f.model(model)
+      expect += ((f.name, f.full, model))
+      assert(TableLog.latestVersion(t) == expect.size,
+        s"${f.name} must commit exactly one version")
+    }
+    assert(expect.size > 2 * TableLog.checkpointInterval)
+    // the pruning faces really pruned: the vector they retired is gone
+    Seq(16, 21).foreach(v => assert(
+      TableLog.snapshotAt(t, v).get.dels.size <
+        TableLog.snapshotAt(t, v - 1).get.dels.size, s"v$v must prune"))
+    val logged = java.nio.file.Files.list(java.nio.file.Paths.get(t, "_log"))
+      .toArray.map(_.toString).filter(_.endsWith(".manifest"))
+    assert(logged.length == expect.size)
+    expect.zipWithIndex.foreach { case ((name, full, m), i) =>
+      val v = i + 1L
+      val kind =
+        if (v == 1 || v % TableLog.checkpointInterval == 0 || full) "full"
+        else "delta"
+      assert(manifestKind(t, v) == kind, s"v$v ($name)")
+      assert(TableLog.snapshotAt(t, v).get.rows == m.size, s"v$v ($name) rows")
+      assert(TableLog.readVersion(spark, t, v).count() == m.size,
+        s"v$v ($name) read")
+    }
+    assert(contentOf(t) == model.toSeq.sorted)
+  }
+
+  test("metadata-only commits land on the checkpoint cadence too: " +
+      "resolution never replays a full interval of deltas") {
+    val t = tmp("graft_log_cadence_meta")
+    TableLog.create(spark, t, spark.range(10).toDF("id"))
+    def upTo(v: Long): Unit =
+      while (TableLog.latestVersion(t) < v - 1) TableLog.commitMetadataOnly(t)
+    upTo(10)
+    TableLog.addColumn(spark, t, "a", org.apache.spark.sql.types.LongType)
+    upTo(20)
+    TableLog.addCheckConstraint(spark, t, "pos", "id >= 0")
+    upTo(30)
+    TableLog.dropCheckConstraint(t, "pos")
+    upTo(40)
+    TableLog.renameColumn(spark, t, "a", "b")
+    assert(TableLog.latestVersion(t) == 40)
+    (2L to 40L).foreach(v => assert(manifestKind(t, v) ==
+      (if (v % TableLog.checkpointInterval == 0) "full" else "delta"), s"v$v"))
+    // each checkpoint carries what its delta would have folded in
+    assert(TableLog.snapshotAt(t, 20).get.checks == Seq("pos" -> "id >= 0"))
+    assert(TableLog.snapshotAt(t, 30).get.checks.isEmpty)
+    val s = TableLog.snapshot(t).get
+    assert(s.schemaOps.map(op => (op.kind, op.col, op.to)) ==
+      Seq(("rename", "a", "b")))
+    assert(TableLog.read(spark, t).columns.toSeq == Seq("id", "b"))
+    assert(TableLog.read(spark, t).count() == 10)
+  }
+
+  /** Loses its first CAS on purpose: before refusing, it uninstalls
+    * itself and lands a competing one-row append through the default
+    * hard-link primitive, so the caller must rebuild its commit against
+    * a base that moved under it. */
+  private final class LoseFirstCas(t: String, id: Long)
+      extends graft.sinks.CommitPrimitive {
+    @volatile var fired = false
+    def putIfAbsent(path: java.nio.file.Path,
+        content: Array[Byte]): Boolean = {
+      TableLog.clearCommitPrimitive(t)
+      TableLog.append(spark, t, rowsOf(Seq(id), _ => 0L), statsCols = Seq("id"))
+      fired = true
+      false
+    }
+  }
+
+  test("CAS conflict on every face: the retry rebuilds against the " +
+      "interleaved append and lands exactly one version above it") {
+    val t = tmp("graft_log_conflict")
+    val faces = faceScript(t)
+    faces.head.run()
+    var model = faces.head.model(Map.empty)
+    faces.tail.zipWithIndex.foreach { case (f, i) =>
+      val before = TableLog.latestVersion(t)
+      val rowsBefore = TableLog.snapshot(t).get.rows
+      val racer = new LoseFirstCas(t, 9000L + i)
+      TableLog.setCommitPrimitive(t, racer)
+      try f.run() finally TableLog.clearCommitPrimitive(t)
+      assert(racer.fired, s"${f.name} never reached the commit primitive")
+      model = f.model(model + ((9000L + i) -> 0L))
+      assert(TableLog.latestVersion(t) == before + 2,
+        s"${f.name}: exactly one version above the interleaved append")
+      val raced = TableLog.snapshotAt(t, before + 1).get
+      assert(raced.action == "append" && raced.rows == rowsBefore + 1,
+        s"${f.name}: v${before + 1} must be the interleaved append")
+      assert(TableLog.snapshot(t).get.rows == model.size, s"${f.name} rows")
+      assert(contentOf(t) == model.toSeq.sorted, s"${f.name} content")
+    }
+  }
+}
+
+object TableLogSpec {
+  /** One commit face: `run` commits it, `model` maps the table's
+    * (id → v) content across it, `full` marks a face whose manifest
+    * must be a checkpoint whatever its version (a whole-list
+    * replacement, or a commit that prunes dead delete sidecars). */
+  private final case class Face(name: String, run: () => Unit,
+      model: Map[Long, Long] => Map[Long, Long], full: Boolean = false)
 }
