@@ -5,7 +5,7 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import graft.sinks.TableLog
+import graft.sinks.{StagedWriter, TableLog}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession, SQLContext}
 import org.apache.spark.sql.catalyst.analysis.{
@@ -560,6 +560,15 @@ object GraftCatalog {
       key: String): Seq[String] =
     props.find(_._1.equalsIgnoreCase(key)).toSeq
       .flatMap(_._2.split(",")).map(_.trim).filter(_.nonEmpty)
+
+  /** The staged writer for a catalog table's write: its
+    * property-declared stats plus `audits`, counted in the tasks. */
+  private[catalog] def stagedWriter(spark: SparkSession,
+      schema: StructType, props: Map[String, String],
+      audits: Seq[TableLog.StagedAudit] = Nil): StagedWriter =
+    StagedWriter(spark, schema, colsProp(props, "statsCols"),
+      colsProp(props, "strStatsCols"), colsProp(props, "bloomStatsCols"),
+      audits = audits.map(_.bad))
 
   /** The configured `GraftCatalog` named `name` on this session, if
     * any — the DML face uses this to claim `catalog.ns.table`

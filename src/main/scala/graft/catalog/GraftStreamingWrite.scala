@@ -1,15 +1,14 @@
 package graft.catalog
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
-import graft.sinks.TableLog
+import graft.sinks.{StagedFile, StagedWriter, TableLog}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{
   DataWriter, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{
   StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.graft.{ParquetWrite, ParquetWriteFactory, RowFileWriter}
 import org.apache.spark.sql.types.StructType
 
 /** The NATIVE streaming sink: `df.writeStream.toTable("graft.ns.t")`.
@@ -44,74 +43,53 @@ final class GraftStreamingWrite(path: String, props: Map[String, String],
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
     new GraftStreamWriterFactory(path, queryId, runId,
-      ParquetWrite.factory(SparkSession.active, schema))
+      GraftCatalog.stagedWriter(SparkSession.active, schema, props))
 
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
-    val files = messages.collect {
-      case m: GraftFileMessage if m.rows > 0 => m.relPath }
-    TableLog.commitStreamEpoch(SparkSession.active, path, files.toSeq,
-      txnId = s"$queryId#$epochId",
-      statsCols = GraftCatalog.colsProp(props, "statsCols"),
-      strStatsCols = GraftCatalog.colsProp(props, "strStatsCols"),
-      bloomStatsCols = GraftCatalog.colsProp(props, "bloomStatsCols"),
-      writeSchema = Some(schema))
+    TableLog.commitStreamEpoch(SparkSession.active, path,
+      messages.toSeq.collect { case GraftFileMessage(Some(f)) => f },
+      txnId = s"$queryId#$epochId", writeSchema = Some(schema))
     ()
   }
 
   override def abort(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
-      case m: GraftFileMessage =>
-        val p = Paths.get(path, m.relPath)
-        Files.deleteIfExists(p)
-        Files.deleteIfExists(p.resolveSibling(
-          s".${p.getFileName.toString}.crc"))
+      case GraftFileMessage(Some(f)) =>
+        StagedWriter.drop(Paths.get(path, f.entry.path))
       case _ => ()
     }
 }
 
-final case class GraftFileMessage(relPath: String, rows: Long)
+/** A write task's staged file, or None for an empty task. */
+final case class GraftFileMessage(staged: Option[StagedFile])
     extends WriterCommitMessage
 
-/** Serializable; ships the driver-captured parquet conf to executors.
+object GraftFileMessage {
+  /** The DataWriter over one staged-file task (batch and streaming). */
+  private[catalog] def writer(f: StagedWriter#Task): DataWriter[InternalRow] =
+    new DataWriter[InternalRow] {
+      override def write(r: InternalRow): Unit = f.write(r)
+      override def commit(): WriterCommitMessage = GraftFileMessage(f.commit())
+      override def abort(): Unit = f.abort()
+      override def close(): Unit = ()
+    }
+}
+
+/** Serializable; ships the driver-built staged writer to executors.
   * File names carry (run, epoch, partition, task-attempt): two
   * attempts of one partition never collide within a run, and the
   * per-run id keeps a restart's replay of an already-manifested epoch
   * from colliding with the first run's files. Losers stay
   * unmanifested. */
 final class GraftStreamWriterFactory(tablePath: String, queryId: String,
-    runId: String, pw: ParquetWriteFactory)
+    runId: String, w: StagedWriter)
     extends StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
-    new DataWriter[InternalRow] {
-      private val rel =
-        f"data/stream-$queryId-e$epochId%06d/p$partitionId%05d-t$taskId-$runId.parquet"
-      private var rows = 0L
-      private var w: RowFileWriter = null
-      override def write(r: InternalRow): Unit = {
-        if (w == null) {
-          Files.createDirectories(Paths.get(tablePath, rel).getParent)
-          w = pw.open(s"$tablePath/$rel", partitionId,
-            (taskId & 0x7fffffffL).toInt)
-        }
-        w.write(r)
-        rows += 1
-      }
-      override def commit(): WriterCommitMessage = {
-        if (w != null) w.close()
-        GraftFileMessage(rel, rows)
-      }
-      override def abort(): Unit = if (w != null) {
-        w.close()
-        val p = Paths.get(tablePath, rel)
-        Files.deleteIfExists(p)
-        Files.deleteIfExists(p.resolveSibling(
-          s".${p.getFileName.toString}.crc"))
-        ()
-      }
-      override def close(): Unit = ()
-    }
+    GraftFileMessage.writer(w.open(tablePath,
+      f"data/stream-$queryId-e$epochId%06d/p$partitionId%05d-t$taskId-$runId.parquet",
+      partitionId, (taskId & 0x7fffffffL).toInt))
 }

@@ -452,14 +452,11 @@ object PruneLogScan extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   /** A string equality prunes twice: the [min,max] string range, then
-    * the per-file bloom (which needs a live session for the probe
-    * hash). */
+    * the per-file bloom. */
   private def strEqPrune(s: TableLog.Snapshot, c: String, v: String)
-      : Seq[TableLog.FileEntry] = {
-    val ranged = TableLog.prunedFilesInOf(s, c, Seq(v))
-    TableLog.prunedFilesPointOf(s.copy(files = ranged),
-      SparkSession.active, c, v)
-  }
+      : Seq[TableLog.FileEntry] =
+    TableLog.prunedFilesPointOf(
+      s.copy(files = TableLog.prunedFilesInOf(s, c, Seq(v))), c, v)
 
   /** Replace the leaf with the ordinary snapshot scan of `files`
     * (MOR- and schema-op-aware), output re-aliased to the relation's

@@ -11,9 +11,9 @@ import org.apache.spark.util.SerializableConfiguration
 
 /** Executor-side single-file parquet writing over Spark's OWN writer
   * stack (`ParquetOutputWriter`/`ParquetWriteSupport`, both
-  * private[sql] — hence this package): the streaming `toTable` sink's
-  * DataWriters write one file per task directly, outside
-  * `FileFormatWriter`, and the epoch commit manifests them. Bytes are
+  * private[sql] — hence this package): `graft.sinks.StagedWriter`, the
+  * one caller, writes one file per task directly, outside
+  * `FileFormatWriter`, and the commit manifests them. Bytes are
   * identical to a batch write: same write support, same
   * session-resolved SQL conf (legacy-format/timestamp-type keys ride
   * in `newHadoopConf`), snappy like every sink in this engine. */

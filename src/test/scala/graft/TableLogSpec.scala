@@ -1107,58 +1107,239 @@ class TableLogSpec extends SparkSpec {
     assert(TableLog.latestVersion(t) == v)
   }
 
+  /** The per-file stats ORACLE: the manifested file read back on its
+    * own and aggregated with plain Spark — rows, each long range with
+    * its null count, each string range, each derived range, and each
+    * bloom bitset (omitted once saturated) must equal the file's entry
+    * exactly and in order. An entry that records no row count (−1)
+    * leaves its null counts unknown too. */
+  private def assertStatsOracle(t: String, f: TableLog.FileEntry,
+      statsCols: Seq[String], strStatsCols: Seq[String] = Nil,
+      bloomCols: Seq[String] = Nil,
+      derived: Seq[(String, org.apache.spark.sql.Column)] = Nil): Unit = {
+    val df = spark.read.parquet(s"$t/${f.path}")
+    val aggs = count(lit(1)) +: (statsCols.flatMap(c => Seq(
+      min(col(c).cast("long")), max(col(c).cast("long")), count(col(c)))) ++
+      strStatsCols.flatMap(c => Seq(
+        min(col(c).cast("string")), max(col(c).cast("string")))) ++
+      derived.flatMap { case (_, e) =>
+        Seq(min(e.cast("long")), max(e.cast("long"))) })
+    val r = df.agg(aggs.head, aggs.tail: _*).head()
+    val rows = r.getLong(0)
+    assert(rows > 0, s"zero-row file ${f.path} reached the manifest")
+    if (f.rows >= 0) assert(f.rows == rows, s"${f.path}: rows")
+    assert(f.bytes > 0 && f.bytes == java.nio.file.Files.size(
+      java.nio.file.Paths.get(t, f.path)), s"${f.path}: bytes")
+    val so = 1 + 3 * statsCols.size
+    val dof = so + 2 * strStatsCols.size
+    val long = statsCols.zipWithIndex.flatMap { case (c, i) =>
+      val b = 1 + 3 * i
+      if (r.isNullAt(b)) None
+      else Some(TableLog.FileStat(c, r.getLong(b), r.getLong(b + 1),
+        if (f.rows >= 0) rows - r.getLong(b + 2) else -1L))
+    } ++ derived.zipWithIndex.flatMap { case ((n, _), i) =>
+      val b = dof + 2 * i
+      if (r.isNullAt(b)) None
+      else Some(TableLog.FileStat(n, r.getLong(b), r.getLong(b + 1)))
+    }
+    assert(f.stats == long, s"${f.path}: long stats")
+    val str = strStatsCols.zipWithIndex.flatMap { case (c, i) =>
+      val b = so + 2 * i
+      if (r.isNullAt(b)) None
+      else Some(TableLog.FileStrStat(c, r.getString(b), r.getString(b + 1)))
+    }
+    val (m, k) = (TableLog.bloomM, TableLog.bloomK)
+    val blooms = bloomCols.flatMap { c =>
+      val ps = (0 until k).map(i => collect_set(
+        pmod(xxhash64(lit(i), col(c)), lit(m.toLong)).cast("int")))
+      val br = df.agg(ps.head, ps.tail: _*).head()
+      val pos = (0 until k).flatMap(i => br.getSeq[Int](i)).distinct
+      if (pos.size.toDouble / m > TableLog.bloomMaxFill) None
+      else {
+        val bits = new java.util.BitSet(m)
+        pos.foreach(bits.set)
+        Some(TableLog.FileStrStat(s"bloom:$c",
+          java.util.Base64.getEncoder.encodeToString(bits.toByteArray),
+          s"$m,$k"))
+      }
+    }
+    assert(f.strStats == str ++ blooms, s"${f.path}: string/bloom stats")
+  }
+
+  test("per-file stats equal a test-side oracle on every write face " +
+      "(batch, catalog ReplaceData and WriteDelta, streaming epoch); " +
+      "empty writes and zero-row tasks leave no manifested file") {
+    val statsCols = Seq("k", "vi", "vs", "maybe", "allnull")
+    val strCols = Seq("s", "smaybe", "snull")
+    val bloomCols = Seq("k", "maybe", "s")
+    // int/short/long, nullable and all-null columns, empty and
+    // multi-byte UTF-8 strings over ids [lo + 200, lo + n): the source
+    // has 5 even partitions and the first is filtered away, so every
+    // write below runs one zero-row task
+    val shape = Seq("id AS k", "CAST(id % 7 AS int) AS vi",
+      "CAST(id % 3 AS short) AS vs", "IF(id % 2 = 0, id, NULL) AS maybe",
+      "CAST(NULL AS long) AS allnull",
+      "CASE WHEN id % 11 = 0 THEN '' WHEN id % 7 = 0 " +
+        "THEN concat('é→', id) ELSE concat('s', id) END AS s",
+      "IF(id % 2 = 0, concat('m', id), NULL) AS smaybe",
+      "CAST(NULL AS string) AS snull")
+    def mk(lo: Long, n: Long) = spark.range(lo, lo + n, 1, 5)
+      .where($"id" >= lo + 200).selectExpr(shape: _*)
+    def added(t: String, v: Long) =
+      TableLog.snapshot(t).get.files.filter(_.ver == v)
+    def oracle(t: String, fs: Seq[TableLog.FileEntry]): Unit = {
+      assert(fs.nonEmpty)
+      fs.foreach(assertStatsOracle(t, _, statsCols, strCols, bloomCols))
+    }
+
+    // create / append / zOrder: the batch faces
+    val t = tmp("graft_log_stats_oracle")
+    val v1 = TableLog.create(spark, t, mk(0, 1000), statsCols,
+      strStatsCols = strCols, bloomStatsCols = bloomCols)
+    assert(added(t, v1).size == 4 && TableLog.snapshot(t).get.rows == 800)
+    oracle(t, added(t, v1))
+    // one high-NDV file: its long and string blooms saturate and are
+    // omitted (the null-heavy `maybe` bloom need not)
+    val v2 = TableLog.append(spark, t, mk(10000, 12200).coalesce(1),
+      statsCols, strStatsCols = strCols, bloomStatsCols = bloomCols)
+    assert(added(t, v2).size == 1)
+    assert(!added(t, v2).head.strStats.exists(_.col == "bloom:k"))
+    oracle(t, added(t, v2))
+    // an empty write adds no file and leaves rows unchanged
+    val v3 = TableLog.append(spark, t, mk(0, 1000).where("k < 0"),
+      statsCols, strStatsCols = strCols, bloomStatsCols = bloomCols)
+    assert(added(t, v3).isEmpty && TableLog.snapshot(t).get.rows == 12800)
+    val rA = (0L, 30000L)
+    val rB = (0L, 6L)
+    val z = graft.functions.ZOrderLong.zOrder(
+      graft.operators.LayoutOps.norm16(col("k"), rA._1, rA._2),
+      graft.operators.LayoutOps.norm16(col("vi"), rB._1, rB._2))
+    val vz = TableLog.zOrder(spark, t, 3, "k", rA, "vi", rB,
+      statsCols = statsCols)
+    assert(added(t, vz).size == 3)
+    added(t, vz).foreach(assertStatsOracle(t, _, statsCols,
+      derived = Seq(TableLog.z2StatName("k", "vi", rA, rB) -> z)))
+    // every parquet file on disk is referenced by some version
+    import scala.jdk.CollectionConverters._
+    val referenced = (1L to TableLog.latestVersion(t)).flatMap(v =>
+      TableLog.snapshotAt(t, v).toSeq.flatMap(_.files.map(_.path))).toSet
+    val onDisk = java.nio.file.Files
+      .walk(java.nio.file.Paths.get(t, "data")).iterator().asScala
+      .filter(_.toString.endsWith(".parquet"))
+      .map(p => java.nio.file.Paths.get(t).relativize(p).toString).toSet
+    assert(onDisk == referenced, s"staged-write leak/loss at $t")
+
+    // the catalog faces: ReplaceData UPDATE, WriteDelta MERGE, and one
+    // streaming epoch, with the same stats declared as properties
+    val cat = "graft_oracle"
+    val wh = java.nio.file.Files.createTempDirectory("graft_oracle_wh")
+      .toString
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      classOf[graft.catalog.GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.ns")
+    val ddl = "k BIGINT, vi INT, vs SMALLINT, maybe BIGINT, " +
+      "allnull BIGINT, s STRING, smaybe STRING, snull STRING"
+    val props = s"'statsCols' = '${statsCols.mkString(",")}', " +
+      s"'strStatsCols' = '${strCols.mkString(",")}', " +
+      s"'bloomStatsCols' = '${bloomCols.mkString(",")}'"
+    spark.sql(s"CREATE TABLE $cat.ns.cow ($ddl) TBLPROPERTIES ($props)")
+    val tc = s"$wh/ns/cow"
+    TableLog.append(spark, tc, mk(0, 1000), statsCols,
+      strStatsCols = strCols, bloomStatsCols = bloomCols)
+    spark.sql(s"UPDATE $cat.ns.cow SET vi = vi + 1, " +
+      "s = concat(s, 'é'), maybe = NULL WHERE k >= 300 AND k < 500")
+    assert(spark.table(s"$cat.ns.cow").count() == 800)
+    oracle(tc, added(tc, TableLog.latestVersion(tc)))
+
+    spark.sql(s"CREATE TABLE $cat.ns.mor ($ddl) " +
+      s"TBLPROPERTIES ($props, 'rowLevelMode' = 'mor')")
+    val tm = s"$wh/ns/mor"
+    TableLog.append(spark, tm, mk(0, 1000), statsCols,
+      strStatsCols = strCols, bloomStatsCols = bloomCols)
+    mk(600, 600).createOrReplaceTempView("graft_oracle_src")
+    // per-task deletion-vector shards land unfolded
+    spark.conf.set("spark.graft.rowLevel.foldDvShardBytes", "0")
+    try spark.sql(s"""MERGE INTO $cat.ns.mor t USING graft_oracle_src s
+      ON t.k = s.k
+      WHEN MATCHED THEN UPDATE SET vi = s.vi + 1, s = concat(s.s, 'é')
+      WHEN NOT MATCHED THEN INSERT *""")
+    finally spark.conf.unset("spark.graft.rowLevel.foldDvShardBytes")
+    assert(spark.table(s"$cat.ns.mor").count() == 1000)
+    val vm = TableLog.latestVersion(tm)
+    oracle(tm, added(tm, vm))
+    val shards = TableLog.snapshot(tm).get.dels.filter(_.ver == vm)
+      .map(_.file)
+    assert(shards.nonEmpty)
+    shards.foreach(assertStatsOracle(tm, _,
+      Seq(TableLog.DvPosField), Seq(TableLog.DvFileField)))
+
+    spark.sql(s"CREATE TABLE $cat.ns.str ($ddl) TBLPROPERTIES ($props)")
+    val ts = s"$wh/ns/str"
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val mem = MemoryStream[Long]
+    val q = mem.toDF().toDF("id").selectExpr(shape: _*).repartition(3)
+      .writeStream.option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("graft_oracle_ck").toString)
+      .toTable(s"$cat.ns.str")
+    try {
+      mem.addData(0L until 600L)
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(TableLog.snapshot(ts).get.rows == 600)
+    oracle(ts, added(ts, TableLog.latestVersion(ts)))
+  }
+
+  // The three tests below keep the names of the stats paths they first
+  // pinned (a distributed count pass, a footer harvest, a committer
+  // write). The writer task is now the only stats path; each test keeps
+  // its scenario and checks it against the oracle above.
+
   test("distributed commit-stats count pass (past the footer " +
       "threshold): zero-row files still never manifest, stats and " +
       "rows identical to the footer path") {
-    val saved = TableLog.footerCountThreshold
-    TableLog.footerCountThreshold = 0 // force the distributed path
-    try {
-      val t = tmp("graft_log_zerorow_dist")
-      TableLog.create(spark, t,
-        spark.range(4000).toDF("k").repartitionByRange(4, $"k"),
-        statsCols = Seq("k"))
-      val before = TableLog.snapshot(t).get
-      assert(before.files.size == 4)
-      assert(before.rows == 4000L)
-      assert(before.files.forall(_.stats.exists(_.col == "k")),
-        "distributed pass must derive the same per-file stats")
-      // delete exactly one interior file's range: its rewrite is a
-      // zero-row part file — with the distributed pass, the zero-row
-      // set is listing − aggregate groups, and it must still vanish
-      val f1 = before.files.find { f =>
-        val s = f.stats.find(_.col == "k").get
-        s.min <= 1500 && 1500 <= s.max
-      }.get
-      val st = f1.stats.find(_.col == "k").get
-      val v = TableLog.deleteWhere(spark, t, "k", st.min, st.max,
-        statsCols = Seq("k"))
-      val after = TableLog.snapshot(t).get
-      assert(v == before.version + 1)
-      assert(!after.files.map(_.path).contains(f1.path))
-      assert(after.files.size == 3)
-      assert(after.files.forall(_.stats.exists(_.col == "k")))
-      val expected = 4000L - (st.max - st.min + 1)
-      assert(after.rows == expected)
-      assert(TableLog.read(spark, t).count() == expected)
-      // the no-op contract survives here too
-      assert(TableLog.deleteWhere(spark, t, "k", 1000000, 2000000,
-        statsCols = Seq("k")) == v)
-      // null counts ride the distributed pass like the footer path:
-      // nulls = per-file rows − the aggregate's non-null count
-      assert(after.files.forall(
-        _.stats.find(_.col == "k").exists(_.nulls == 0)),
-        "null-free files must record nulls = 0 through the " +
-          "distributed pass")
-      TableLog.append(spark, t,
-        spark.range(4).selectExpr(
-          "IF(id % 2 = 0, id + 50000, NULL) AS k").coalesce(1),
-        statsCols = Seq("k"))
-      val nf = TableLog.snapshot(t).get.files
-        .find(_.stats.exists(st => st.col == "k" && st.min >= 50000))
-        .getOrElse(fail("null-bearing file not found"))
-      assert(nf.stats.find(_.col == "k").get.nulls == 2,
-        "the distributed pass must record the exact null count")
-    } finally TableLog.footerCountThreshold = saved
+    val t = tmp("graft_log_zerorow_dist")
+    TableLog.create(spark, t,
+      spark.range(4000).toDF("k").repartitionByRange(4, $"k"),
+      statsCols = Seq("k"))
+    val before = TableLog.snapshot(t).get
+    assert(before.files.size == 4)
+    assert(before.rows == 4000L)
+    before.files.foreach(assertStatsOracle(t, _, Seq("k")))
+    // delete exactly one interior file's range: its rewrite is a
+    // zero-row part file, and it must vanish
+    val f1 = before.files.find { f =>
+      val s = f.stats.find(_.col == "k").get
+      s.min <= 1500 && 1500 <= s.max
+    }.get
+    val st = f1.stats.find(_.col == "k").get
+    val v = TableLog.deleteWhere(spark, t, "k", st.min, st.max,
+      statsCols = Seq("k"))
+    val after = TableLog.snapshot(t).get
+    assert(v == before.version + 1)
+    assert(!after.files.map(_.path).contains(f1.path))
+    assert(after.files.size == 3)
+    after.files.foreach(assertStatsOracle(t, _, Seq("k")))
+    val expected = 4000L - (st.max - st.min + 1)
+    assert(after.rows == expected)
+    assert(TableLog.read(spark, t).count() == expected)
+    // the no-op contract survives here too
+    assert(TableLog.deleteWhere(spark, t, "k", 1000000, 2000000,
+      statsCols = Seq("k")) == v)
+    assert(after.files.forall(
+      _.stats.find(_.col == "k").exists(_.nulls == 0)),
+      "null-free files must record nulls = 0")
+    TableLog.append(spark, t,
+      spark.range(4).selectExpr(
+        "IF(id % 2 = 0, id + 50000, NULL) AS k").coalesce(1),
+      statsCols = Seq("k"))
+    val nf = TableLog.snapshot(t).get.files
+      .find(_.stats.exists(st => st.col == "k" && st.min >= 50000))
+      .getOrElse(fail("null-bearing file not found"))
+    assert(nf.stats.find(_.col == "k").get.nulls == 2,
+      "the writer task must record the exact null count")
+    assertStatsOracle(t, nf, Seq("k"))
   }
 
   test("footer-harvested commit stats (small commits): FileStat " +
@@ -1171,34 +1352,22 @@ class TableLogSpec extends SparkSpec {
       "IF(id % 2 = 0, id, NULL) AS maybe",
       "CAST(NULL AS long) AS allnull").repartitionByRange(4, $"k")
     val cols = Seq("k", "vi", "vs", "maybe", "allnull")
-    // eligible small commit: stats come from the footers, ZERO staged
-    // data scans (the whole point — one fewer Spark job per commit)
+    // a small commit with stats runs as many jobs as one without
     val tF = tmp("graft_log_fstats_f")
-    val p0 = TableLog.stagedScanPasses.get()
-    TableLog.create(spark, tF, mk(), statsCols = cols)
-    assert(TableLog.stagedScanPasses.get() - p0 == 0,
-      "an eligible small commit must not run the stats aggregate job")
-    // same data through the DISTRIBUTED aggregate pass
-    val saved = TableLog.footerCountThreshold
-    TableLog.footerCountThreshold = 0
-    val tA = tmp("graft_log_fstats_a")
-    try TableLog.create(spark, tA, mk(), statsCols = cols)
-    finally TableLog.footerCountThreshold = saved
-    def shape(t: String) = TableLog.snapshot(t).get.files
-      .map(f => (f.rows,
-        f.stats.map(s => (s.col, s.min, s.max, s.nulls)).sortBy(_._1)))
-      .sortBy(_._2.headOption.map(_._2).getOrElse(Long.MaxValue))
-    assert(shape(tF) == shape(tA),
-      "footer-harvested stats must equal the aggregate pass exactly")
+    val withStats = jobsDuring(
+      TableLog.create(spark, tF, mk(), statsCols = cols))._2
+    val withNone = jobsDuring(
+      TableLog.create(spark, tmp("graft_log_fstats_n"), mk()))._2
+    assert(withStats == withNone,
+      "a small commit's stats must not run a job of their own")
+    TableLog.snapshot(tF).get.files
+      .foreach(assertStatsOracle(tF, _, cols))
     assert(TableLog.snapshot(tF).get.rows == 1000L)
-    // the all-null column records NO range stat on either path
+    // the all-null column records NO range stat
     assert(TableLog.snapshot(tF).get.files
       .forall(!_.stats.exists(_.col == "allnull")))
-    // string stat columns are footer-harvested too (BINARY/UTF8 footer
-    // min/max use the same unsigned-lexicographic order as Spark's
-    // StringType min/max): zero staged scans, value-exact parity with
-    // the aggregate pass — including empty strings, multi-byte UTF-8,
-    // a nullable column and an all-null column
+    // string stats: empty strings, multi-byte UTF-8, a nullable column
+    // and an all-null column
     val mkS = () => spark.range(100).selectExpr(
       "id AS k",
       "CASE WHEN id % 11 = 0 THEN '' WHEN id % 7 = 0 " +
@@ -1207,59 +1376,46 @@ class TableLogSpec extends SparkSpec {
       "CAST(NULL AS string) AS snull").repartitionByRange(4, $"k")
     val strCols = Seq("s", "smaybe", "snull")
     val tS = tmp("graft_log_fstats_s")
-    val p1 = TableLog.stagedScanPasses.get()
     TableLog.create(spark, tS, mkS(),
       statsCols = Seq("k"), strStatsCols = strCols)
-    assert(TableLog.stagedScanPasses.get() - p1 == 0,
-      "an eligible string-stat commit must not run the stats aggregate")
-    TableLog.footerCountThreshold = 0
-    val tSA = tmp("graft_log_fstats_sa")
-    try TableLog.create(spark, tSA, mkS(),
-      statsCols = Seq("k"), strStatsCols = strCols)
-    finally TableLog.footerCountThreshold = saved
-    def strShape(t: String) = TableLog.snapshot(t).get.files
-      .map(f => (f.rows,
-        f.stats.map(s => (s.col, s.min, s.max, s.nulls)).sortBy(_._1),
-        f.strStats.map(s => (s.col, s.min, s.max)).sortBy(_._1)))
-      .sortBy(_._2.headOption.map(_._2).getOrElse(Long.MaxValue))
-    assert(strShape(tS) == strShape(tSA),
-      "footer-harvested string stats must equal the aggregate pass")
+    TableLog.snapshot(tS).get.files
+      .foreach(assertStatsOracle(tS, _, Seq("k"), strCols))
     assert(TableLog.snapshot(tS).get.files.forall(f =>
       f.stats.exists(_.col == "k") && f.strStats.exists(_.col == "s") &&
         !f.strStats.exists(_.col == "snull")))
+    // a shape the footers could not serve (bloom columns) gets the same
+    // exact stats from the same job count
+    val tB = tmp("graft_log_fstats_b")
+    TableLog.create(spark, tB, mkS().limit(0),
+      statsCols = Seq("k"), strStatsCols = strCols)
+    val bloomJobs = jobsDuring(TableLog.append(spark, tB, mkS(),
+      statsCols = Seq("k"), strStatsCols = strCols,
+      bloomStatsCols = Seq("k", "s")))._2
+    val tP = tmp("graft_log_fstats_p")
+    TableLog.create(spark, tP, mkS().limit(0))
+    val plainJobs = jobsDuring(TableLog.append(spark, tP, mkS()))._2
+    assert(bloomJobs == plainJobs,
+      "bloom stats must not add a job")
+    val vB = TableLog.latestVersion(tB)
+    val addedB = TableLog.snapshot(tB).get.files.filter(_.ver == vB)
+    assert(addedB.nonEmpty)
+    addedB.foreach(assertStatsOracle(tB, _, Seq("k"), strCols,
+      Seq("k", "s")))
   }
 
   test("direct staged write: manifest shape and read-back identical " +
       "to the committer path; empty writes and zero-row tasks leave " +
       "no manifested file") {
-    // deterministic HASH partitioning for the cross-table comparison:
-    // repartitionByRange boundaries are sample-seeded by rdd.id, so
-    // two separate executions split rows differently near boundaries
-    // (see the replaceWhere meta test's comment) — that would flake
-    // this parity pin on either write path
     val mk = () => spark.range(5000).selectExpr(
       "id AS k", "CAST(id % 9 AS int) AS v",
       "concat('p', id % 4) AS s").repartition(4, $"k")
     val tD = tmp("graft_log_direct")
     TableLog.create(spark, tD, mk(),
       statsCols = Seq("k", "v"), strStatsCols = Seq("s"))
-    val tC = tmp("graft_log_committer")
-    spark.conf.set("spark.graft.write.direct", "false")
-    try TableLog.create(spark, tC, mk(),
-      statsCols = Seq("k", "v"), strStatsCols = Seq("s"))
-    finally spark.conf.unset("spark.graft.write.direct")
-    def shape(t: String) = TableLog.snapshot(t).get.files
-      .map(f => (f.rows,
-        f.stats.map(s => (s.col, s.min, s.max, s.nulls)).sortBy(_._1),
-        f.strStats.map(s => (s.col, s.min, s.max)).sortBy(_._1)))
-      .sortBy(r => (r._1, r._2.headOption.map(_._2).getOrElse(0L)))
-    assert(shape(tD) == shape(tC),
-      "direct-write manifests must match the committer path")
-    assert(TableLog.read(spark, tD).orderBy("k").collect().toSeq ==
-      TableLog.read(spark, tC).orderBy("k").collect().toSeq)
-    // an EMPTY append behaves identically on both paths: no new files,
-    // rows unchanged (lazy open = no file at all; the committer path's
-    // eager empty part files were deleted as zero-row)
+    TableLog.snapshot(tD).get.files
+      .foreach(assertStatsOracle(tD, _, Seq("k", "v"), Seq("s")))
+    assert(TableLog.read(spark, tD).count() == 5000L)
+    // an EMPTY append adds no file (lazy open = no file at all)
     TableLog.append(spark, tD, mk().where("k < 0"),
       statsCols = Seq("k", "v"), strStatsCols = Seq("s"))
     assert(TableLog.snapshot(tD).get.rows == 5000L)
@@ -1276,8 +1432,8 @@ class TableLogSpec extends SparkSpec {
       statsCols = Seq("k", "v"))
     assert(TableLog.read(spark, tR).count() == 2000L)
     assert(TableLog.snapshot(tR).get.files.forall(_.rows > 0L))
-    // no unmanifested garbage beyond CAS-loser class: every on-disk
-    // parquet under data/ is referenced by some version's manifest
+    // no unmanifested garbage: every on-disk parquet under data/ is
+    // referenced by some version's manifest
     import scala.jdk.CollectionConverters._
     Seq(tD, tR).foreach { t =>
       val referenced = (1L to TableLog.latestVersion(t)).flatMap(v =>
@@ -1289,7 +1445,7 @@ class TableLogSpec extends SparkSpec {
         .map(p => java.nio.file.Paths.get(t).relativize(p).toString)
         .toSet
       assert(onDisk == referenced,
-        s"direct-write leak/loss at $t: onDisk-only=${(onDisk --
+        s"staged-write leak/loss at $t: onDisk-only=${(onDisk --
           referenced).take(4)}, referenced-only=${(referenced --
           onDisk).take(4)}")
     }
@@ -2536,30 +2692,49 @@ class TableLogSpec extends SparkSpec {
       TableLog.dropCheckConstraint(t, "nope"))
   }
 
-  test("a constrained staged write costs ONE scan of its staged files " +
-      "(checks ride the stats pass, no second enforcement read)") {
-    val t = tmp("graft_log_checks_onepass")
-    TableLog.create(spark, t, spark.range(100).select($"id".as("k"),
-      ($"id" % 50).as("v")), statsCols = Seq("k"))
-    TableLog.addCheckConstraint(spark, t, "v_range", "v >= 0 AND v < 50")
-    // overwrite rewrite: one staged-scan pass certifies stats + CHECK
-    val p0 = TableLog.stagedScanPasses.get()
-    TableLog.rewrite(spark, t, "overwrite", expectRows = _ => None,
-      statsCols = Seq("k"))(
-      _ => spark.range(50).select($"id".as("k"), ($"id" % 50).as("v")))
-    assert(TableLog.stagedScanPasses.get() - p0 == 1,
-      "constrained overwrite must scan its staged files exactly once")
-    // replaceWhere: slice predicate + CHECK + stats in one pass over
-    // the new slice; the keep-side rewrite carries NO audits and its
-    // integer stats come from the just-written footers (zero staged
-    // data scans — the footer-harvest fast path)
-    val p1 = TableLog.stagedScanPasses.get()
-    TableLog.replaceWhere(spark, t, $"k" >= 0 && $"k" < 10,
-      Seq((3L, 49L)).toDF("k", "v"), statsCols = Seq("k"))
-    assert(TableLog.stagedScanPasses.get() - p1 == 1,
-      "constrained replaceWhere = one audited pass over the new " +
-        "slice; the keep-side rewrite's stats are footer-harvested")
-    assert(TableLog.read(spark, t).count() == 41)
+  test("staged writes read nothing back: CHECK audits and range, " +
+      "string and bloom stats add no Spark job to a commit") {
+    def table(name: String, checked: Boolean): String = {
+      val t = tmp(name)
+      TableLog.create(spark, t, spark.range(100).select($"id".as("k"),
+        ($"id" % 50).as("v")), statsCols = Seq("k"))
+      if (checked)
+        TableLog.addCheckConstraint(spark, t, "v_range", "v >= 0 AND v < 50")
+      t
+    }
+    val tc = table("graft_log_jobs_checked", checked = true)
+    val tu = table("graft_log_jobs_plain", checked = false)
+    // overwrite rewrite: the writer counts the CHECK while it writes
+    def overwrite(t: String) = jobsDuring(TableLog.rewrite(spark, t,
+      "overwrite", expectRows = _ => None, statsCols = Seq("k"))(
+      _ => spark.range(50).select($"id".as("k"), ($"id" % 50).as("v"))))._2
+    assert(overwrite(tc) == overwrite(tu),
+      "a CHECK must add no job to a constrained overwrite")
+    // replaceWhere: slice predicate and CHECK counted while the new
+    // slice is written
+    def replace(t: String) = jobsDuring(TableLog.replaceWhere(spark, t,
+      $"k" >= 0 && $"k" < 10, Seq((3L, 49L)).toDF("k", "v"),
+      statsCols = Seq("k")))._2
+    assert(replace(tc) == replace(tu),
+      "a CHECK must add no job to a constrained replaceWhere")
+    assert(TableLog.read(spark, tc).count() == 41)
+    // every stats kind rides the write job: an append declaring range,
+    // string and bloom stats runs as many jobs as one declaring none,
+    // and so does a small commit with range stats only
+    def append(name: String, statsCols: Seq[String],
+        strStatsCols: Seq[String], bloomStatsCols: Seq[String]): Int = {
+      val t = tmp(name)
+      TableLog.create(spark, t, spark.range(10)
+        .select($"id".as("k"), $"id".cast("string").as("s")))
+      jobsDuring(TableLog.append(spark, t, spark.range(1000)
+        .select($"id".as("k"), $"id".cast("string").as("s")).repartition(4),
+        statsCols, strStatsCols = strStatsCols,
+        bloomStatsCols = bloomStatsCols))._2
+    }
+    val none = append("graft_log_jobs_none", Nil, Nil, Nil)
+    assert(append("graft_log_jobs_all", Seq("k"), Seq("s"),
+      Seq("k", "s")) == none)
+    assert(append("graft_log_jobs_range", Seq("k"), Nil, Nil) == none)
   }
 
   test("CHECK constraints fence the STAGED-output faces too: " +
@@ -2597,6 +2772,75 @@ class TableLogSpec extends SparkSpec {
     TableLog.rewrite(spark, t, "overwrite", expectRows = _ => None)(
       _ => Seq((1L, 9L)).toDF("k", "v"))
     assert(TableLog.read(spark, t).count() == 1)
+  }
+
+  test("BETWEEN and NULLIF CHECKs and slice predicates fence every " +
+      "staged face: rewrite, replaceWhere, catalog UPDATE (cow and mor)") {
+    // both resolve to runtime-replaceable expressions whose replacement
+    // the writer must make evaluable before it binds them
+    val checks = Seq("v_between" -> "v BETWEEN -10 AND 49",
+      "v_nullif" -> "NULLIF(v, -7) IS NOT NULL OR v IS NULL")
+    def constrain(t: String): Unit = checks.foreach { case (n, c) =>
+      TableLog.addCheckConstraint(spark, t, n, c) }
+    def refused(name: String)(f: => Any): Unit = {
+      val e = intercept[Exception](f)
+      val msg = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(m => String.valueOf(m.getMessage))
+        .mkString(" | ")
+      assert(msg.contains(name), msg)
+    }
+    val t = tmp("graft_log_checks_replaceable")
+    TableLog.create(spark, t, spark.range(100).select($"id".as("k"),
+      ($"id" % 50).as("v")), statsCols = Seq("k"))
+    constrain(t)
+    refused("v_between")(TableLog.rewrite(spark, t, "overwrite",
+      expectRows = _ => None)(_ => Seq((1L, 50L)).toDF("k", "v")))
+    refused("v_nullif")(TableLog.rewrite(spark, t, "overwrite",
+      expectRows = _ => None)(_ => Seq((1L, -7L)).toDF("k", "v")))
+    assert(TableLog.read(spark, t).count() == 100)
+    val slice = expr("k BETWEEN 0 AND 9")
+    refused("v_between")(TableLog.replaceWhere(spark, t, slice,
+      Seq((3L, 50L)).toDF("k", "v"), statsCols = Seq("k")))
+    refused("v_nullif")(TableLog.replaceWhere(spark, t, slice,
+      Seq((3L, -7L)).toDF("k", "v"), statsCols = Seq("k")))
+    // a row outside the slice refuses too: the slice predicate is
+    // audited by the same writer
+    intercept[Exception](TableLog.replaceWhere(spark, t, slice,
+      Seq((30L, 5L)).toDF("k", "v"), statsCols = Seq("k")))
+    assert(TableLog.read(spark, t).count() == 100)
+    TableLog.replaceWhere(spark, t, slice, Seq((3L, 49L)).toDF("k", "v"),
+      statsCols = Seq("k"))
+    assert(TableLog.read(spark, t).count() == 91)
+    TableLog.rewrite(spark, t, "overwrite", expectRows = _ => None)(
+      _ => Seq((1L, -10L), (2L, 49L)).toDF("k", "v"))
+    assert(TableLog.read(spark, t).as[(Long, Long)].collect().toSet ==
+      Set((1L, -10L), (2L, 49L)))
+
+    val cat = "graft_replaceable"
+    val wh = java.nio.file.Files.createTempDirectory("graft_replaceable_wh")
+      .toString
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      classOf[graft.catalog.GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.ns")
+    for ((name, mode) <- Seq("cow" -> "", "mor" -> ", 'rowLevelMode' = 'mor'")) {
+      spark.sql(s"CREATE TABLE $cat.ns.$name (k BIGINT, v BIGINT) " +
+        s"TBLPROPERTIES ('statsCols' = 'k'$mode)")
+      val path = s"$wh/ns/$name"
+      TableLog.append(spark, path, spark.range(20).select($"id".as("k"),
+        lit(1L).as("v")), statsCols = Seq("k"))
+      constrain(path)
+      val before = TableLog.latestVersion(path)
+      refused("v_between")(
+        spark.sql(s"UPDATE $cat.ns.$name SET v = 50 WHERE k = 3"))
+      refused("v_nullif")(
+        spark.sql(s"UPDATE $cat.ns.$name SET v = -7 WHERE k = 3"))
+      assert(TableLog.latestVersion(path) == before,
+        s"$name: a refused UPDATE must not commit")
+      spark.sql(s"UPDATE $cat.ns.$name SET v = 49 WHERE k BETWEEN 3 AND 4")
+      assert(spark.sql(s"SELECT sum(v) FROM $cat.ns.$name").as[Long]
+        .head() == 18L + 2 * 49L, name)
+    }
   }
 
   test("compactSmall racing an append: both commit, no row lost or doubled") {
@@ -3195,6 +3439,30 @@ class TableLogSpec extends SparkSpec {
       "the high-NDV files must carry no bloom")
     assert(TableLog.readWherePoint(spark, t, "k", 1100000L)
       .collect().map(_.getLong(0)).toSeq == Seq(1100000L))
+    // the driver-side probe and the writer share one hash builder: a
+    // held key's positions are all set in its file's bitset, for Long,
+    // Int and String keys
+    val tk = tmp("graft_log_bloom_types")
+    TableLog.create(spark, tk, spark.range(3000).select($"id".as("k"),
+      $"id".cast("int").as("ki"), concat(lit("key"), $"id").as("ks"))
+      .repartition(3), bloomStatsCols = Seq("k", "ki", "ks"))
+    val files = TableLog.snapshot(tk).get.files
+    assert(files.size == 3)
+    files.foreach { f =>
+      def bits(c: String) = java.util.BitSet.valueOf(
+        java.util.Base64.getDecoder.decode(
+          f.strStats.find(_.col == s"bloom:$c").get.min))
+      spark.read.parquet(s"$tk/${f.path}").limit(50).collect().foreach { r =>
+        Seq("k" -> r.getLong(0), "ki" -> r.getInt(1), "ks" -> r.getString(2))
+          .foreach { case (c, v) =>
+            assert(TableLog.bloomPositions(v, TableLog.bloomM,
+              TableLog.bloomK).forall(bits(c).get),
+              s"probe positions of $c = $v unset in ${f.path}")
+          }
+      }
+    }
+    assert(TableLog.readWherePoint(spark, tk, "ki", 1234).count() == 1)
+    assert(TableLog.readWherePoint(spark, tk, "ks", "key1234").count() == 1)
   }
 
   test("maintainAgg absorbs a copy-on-write delete as an O(delta) refresh") {
